@@ -16,9 +16,11 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.{aggregate, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
  * `clickhouse_native` DataSource V2 — the Spark-native re-expression of
@@ -36,11 +38,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *    materialized on the driver;
  *  - a directory/glob of native files scans in parallel across
  *    executors; files carrying a [[NativeIndex]] sidecar (everything
- *    our writer produces) additionally split INTRA-file into
- *    maxPartitionBytes block ranges — foreign files without one fall
- *    back to a single partition (the raw format has no discoverable
- *    split points — "full-scans at this time", README.md:51);
- *  - column pruning is pushed into the block decoder
+ *    our writer produces) additionally split INTRA-file into block
+ *    ranges sized by Spark's file-split rule — foreign files without
+ *    one fall back to a single partition (the raw format has no
+ *    discoverable split points — "full-scans at this time", README.md:51);
+ *  - blocks decode straight into ColumnarBatches ([[ColumnarDecoder]]);
+ *    column pruning is pushed into the block decoder
  *    (SupportsPushDownRequiredColumns → skip-decode), limit pushdown
  *    stops block iteration early (SupportsPushDownLimit);
  *  - a writer exists (the reference only reads; files had to come from
@@ -76,7 +79,7 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
       // Schema evolution: the UNION of every readable file header, in
       // first-seen column order — the layout a long-lived table has
       // after `ALTER TABLE ADD COLUMN` (old parts simply lack the new
-      // column; both partition readers already null-fill absent
+      // column; the scan's decoder already null-fills absent
       // columns per block, and zone-map pruning keeps blocks whose
       // stats lack the column, so the merged schema is sufficient).
       // A column missing from ANY readable file must be nullable —
@@ -640,13 +643,16 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
       (if (zoneFilters.nonEmpty) s" zonemap=[${zoneFilters.mkString(", ")}]" else "")
 
   /**
-   * One partition per file — EXCEPT files our writer indexed
-   * ([[NativeIndex]] sidecar), which split into
-   * `spark.sql.files.maxPartitionBytes`-sized block ranges, the same
-   * way Spark's parquet scan splits on row groups. A 100 GB native
-   * file with a sidecar fans out across the cluster instead of
-   * serializing on one core; foreign files degrade to whole-file
-   * partitions as before.
+   * Split sizing is Spark's own file-scan rule
+   * (`FilePartition.maxSplitBytes`): target = min(maxPartitionBytes,
+   * max(openCostInBytes, totalBytes / minPartitionNum)), so a scan
+   * fans out over the cores even when its files are far below
+   * maxPartitionBytes. Files above the target that our writer indexed
+   * ([[NativeIndex]] sidecar) split into block ranges of about that
+   * size, cut at sidecar block offsets — the way Spark's parquet scan
+   * splits on row groups; files at or below it plan one partition
+   * without reading their sidecar, and foreign files without one
+   * degrade to whole-file partitions.
    *
    * When filters were pushed, each block's sidecar zone maps are
    * tested first and blocks (or entire files) that cannot match plan
@@ -655,8 +661,9 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
    * also a residual Spark re-evaluates per row.
    */
   override def planInputPartitions(): Array[InputPartition] = {
+    val statuses = NativeIO.resolveFileStatuses(paths, conf.value)
     val target = SparkSession.getActiveSession
-      .map(_.sessionState.conf.filesMaxPartitionBytes)
+      .map(FilePartition.maxSplitBytes(_, Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))))
       .getOrElse(128L * 1024 * 1024)
     val pruning = effectiveFilters
     val layoutClaimed = bucketLayout.isDefined
@@ -666,7 +673,7 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
     // different layout) would mis-group, so it must fail like an
     // untagged file does, not silently join a phantom group.
     val snapshotBuckets = bucketLayout.map(_._3.values.toSet)
-    NativeIO.resolveFileStatuses(paths, conf.value).flatMap { st =>
+    statuses.flatMap { st =>
       val p = st.getPath
       // bucket id parses from THIS listing's file names, not the layout
       // snapshot — a file that appeared between the two listings still
@@ -735,203 +742,35 @@ private[native] case class NativeInputPartition(file: String, start: Long = 0L,
 
 private[native] class NativeReaderFactory(required: StructType, limit: Int,
     conf: SerializableHadoopConf) extends PartitionReaderFactory {
+  /**
+   * Columnar for every schema: the wire format is already column-major
+   * per block, so each block decodes straight into a ColumnarBatch
+   * ([[ColumnarDecoder]]) — nested columns into child vectors — and
+   * whole-stage codegen reads the vectors directly. A pushed limit is
+   * counted in rows.
+   */
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val part = partition.asInstanceOf[NativeInputPartition]
+    new BatchPartitionReader(required, limit, Some(part.file))(open(part, conf.value))
+  }
+
+  /** The row path over the same reader. */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new NativePartitionReader(partition.asInstanceOf[NativeInputPartition], required, limit, conf.value)
+    new BatchRowReader(createColumnarReader(partition))
 
-  /**
-   * Columnar emit for flat schemas: the wire format is already
-   * column-major per block, so handing Spark a ColumnarBatch avoids
-   * the per-row boxed GenericInternalRow path and lets whole-stage
-   * codegen read vectors directly. Nested arrays and limit pushdown
-   * stay on the row path (arrays need child-vector assembly; limits
-   * are small by definition).
-   */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    limit < 0 && required.nonEmpty && required.fields.forall(f => f.dataType match {
-      case _: ArrayType | _: MapType | _: StructType | _: DecimalType => false
-      case _ => true
-    })
-
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new NativeColumnarPartitionReader(
-      partition.asInstanceOf[NativeInputPartition], required, conf.value)
-}
-
-/** Executor-side columnar reader: one Native block → one ColumnarBatch. */
-private[native] class NativeColumnarPartitionReader(part: NativeInputPartition,
-    required: StructType, conf: Configuration)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
-
-  private val path = new Path(part.file)
-  private val stream = path.getFileSystem(conf).open(path)
-  if (part.start > 0) stream.seek(part.start) // sidecar offsets are frame boundaries
-  private val blocks = new NativeBlockReader(
-    NativeCompression.maybeWrapRead(stream, conf, part.compression), Some(required.fieldNames.toSet),
-    part.blockCount)
-  private var batch: ColumnarBatch = _
-
-  override def next(): Boolean = {
-    if (batch != null) { batch.close(); batch = null }
-    if (!blocks.hasNext) return false
-    val block = blocks.next()
-    val n = block.numRows
-    val byName = block.columns.map(c => c.name -> c).toMap
-    val vectors = required.fields.map { f =>
-      val v = new OnHeapColumnVector(n, f.dataType)
-      byName.get(f.name) match {
-        case None => v.putNulls(0, n)
-        case Some(col) if col.dict != null && f.dataType == StringType =>
-          fillDictionary(v, col, n)
-        case Some(col) => fill(v, f.dataType, col.values, n)
-      }
-      v: org.apache.spark.sql.vectorized.ColumnVector
-    }
-    batch = new ColumnarBatch(vectors, n)
-    true
+  /** One file's block range: seek to its first block (sidecar offsets
+    * are frame boundaries), then read `blockCount` blocks. */
+  private def open(part: NativeInputPartition, conf: Configuration): NativeBlockReader = {
+    val path = new Path(part.file)
+    val stream = path.getFileSystem(conf).open(path)
+    try {
+      if (part.start > 0) stream.seek(part.start)
+      new NativeBlockReader(NativeCompression.maybeWrapRead(stream, conf, part.compression),
+        None, part.blockCount)
+    } catch { case e: Throwable => stream.close(); throw e }
   }
-
-  /**
-   * LowCardinality string column → dictionary-backed vector: one
-   * byte-array per DISTINCT value plus a bulk int-id write, instead of
-   * copying every row's bytes (the same layout the vectorized parquet
-   * reader uses for dictionary-encoded pages). Nulls (id 0 of a
-   * Nullable inner) are marked in the null mask; their id still points
-   * at the dictionary's default slot, which is never read.
-   */
-  private def fillDictionary(v: OnHeapColumnVector, col: NativeColumn, n: Int): Unit = {
-    val dictBytes = col.dict.map {
-      case u: UTF8String => u.getBytes
-      case other => String.valueOf(other).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    }
-    v.setDictionary(new org.apache.spark.sql.execution.vectorized.Dictionary {
-      override def decodeToBinary(id: Int): Array[Byte] = dictBytes(id)
-      override def decodeToInt(id: Int): Int = throw new UnsupportedOperationException
-      override def decodeToLong(id: Int): Long = throw new UnsupportedOperationException
-      override def decodeToFloat(id: Int): Float = throw new UnsupportedOperationException
-      override def decodeToDouble(id: Int): Double = throw new UnsupportedOperationException
-    })
-    val ids = v.reserveDictionaryIds(n)
-    ids.putInts(0, n, col.dictIds, 0)
-    var i = 0
-    while (i < n) {
-      if (col.values(i) == null) v.putNull(i)
-      i += 1
-    }
-  }
-
-  private def fill(v: OnHeapColumnVector, dt: DataType, values: Array[Any], n: Int): Unit = {
-    var i = 0
-    dt match {
-      case IntegerType | DateType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putInt(i, x.asInstanceOf[java.lang.Integer].intValue())
-          i += 1
-        }
-      case LongType | TimestampType | TimestampNTZType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putLong(i, x.asInstanceOf[java.lang.Long].longValue())
-          i += 1
-        }
-      case DoubleType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putDouble(i, x.asInstanceOf[java.lang.Double].doubleValue())
-          i += 1
-        }
-      case FloatType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putFloat(i, x.asInstanceOf[java.lang.Float].floatValue())
-          i += 1
-        }
-      case BooleanType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putBoolean(i, x.asInstanceOf[java.lang.Boolean].booleanValue())
-          i += 1
-        }
-      case StringType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i)
-          else {
-            val b = x.asInstanceOf[UTF8String].getBytes
-            v.putByteArray(i, b, 0, b.length)
-          }
-          i += 1
-        }
-      case other =>
-        throw new IllegalStateException(s"columnar fill: unexpected type $other")
-    }
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = {
-    if (batch != null) batch.close()
-    blocks.close()
-  }
-}
-
-/**
- * Executor-side streaming reader: one Native file → InternalRows,
- * block at a time (never the whole file — contrast reference
- * src/lib.rs:271-279 which materializes everything, twice).
- */
-private[native] class NativePartitionReader(part: NativeInputPartition, required: StructType,
-    limit: Int, conf: Configuration) extends PartitionReader[InternalRow] {
-
-  private val path = new Path(part.file)
-  private val stream = path.getFileSystem(conf).open(path)
-  if (part.start > 0) stream.seek(part.start) // sidecar offsets are frame boundaries
-  private val blocks = new NativeBlockReader(
-    NativeCompression.maybeWrapRead(stream, conf, part.compression), Some(required.fieldNames.toSet),
-    part.blockCount)
-
-  private var colValues: Array[Array[Any]] = _ // per required-field value arrays
-  private var rowsInBlock = 0
-  private var rowIdx = 0
-  private var emitted = 0L
-  private val row = new GenericInternalRow(required.length)
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (rowIdx >= rowsInBlock) {
-      if (!hasNextBlock) return false
-      val block = blocks.next()
-      val byName = block.columns.map(c => c.name -> c).toMap
-      colValues = required.fields.map { f =>
-        byName.get(f.name).map(_.values).orNull // missing column → null fill
-      }
-      rowsInBlock = block.numRows
-      rowIdx = 0
-    }
-    var i = 0
-    while (i < required.length) {
-      val col = colValues(i)
-      row.update(i, if (col == null) null else col(rowIdx))
-      i += 1
-    }
-    rowIdx += 1
-    emitted += 1
-    true
-  }
-
-  /** Wrap mid-file decode failures with the file path — a truncated or
-    * corrupt part should name itself, not surface as a bare EOF. */
-  private def hasNextBlock: Boolean =
-    try blocks.hasNext
-    catch {
-      case e: java.io.IOException =>
-        throw new java.io.IOException(s"clickhouse_native: corrupt or truncated file ${part.file}: ${e.getMessage}", e)
-    }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = blocks.close()
 }
 
 // ---------------------------------------------------------------------------

@@ -10,15 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * One decoded column of a Native block. `values` holds Catalyst-ready
  * values: UTF8String, java.lang.Integer/Long/Boolean/Float/Double,
  * ArrayData, or null.
- *
- * For LowCardinality string columns the decoder also retains the wire
- * dictionary and per-row indices (`dictIds`): the columnar reader then
- * fills a dictionary-backed vector (one byte-copy per DISTINCT value +
- * bulk int ids) instead of copying every row's bytes — the same layout
- * Spark's vectorized parquet reader uses for dictionary pages.
  */
-final case class NativeColumn(name: String, chType: ChType, values: Array[Any],
-    dict: Array[Any] = null, dictIds: Array[Int] = null)
+final case class NativeColumn(name: String, chType: ChType, values: Array[Any])
 
 /**
  * A decoded Native block: self-describing columnar batch (SURVEY §1.1).
@@ -36,22 +29,12 @@ final case class NativeBlock(columns: Array[NativeColumn], numRows: Int)
  *
  * Decoding is column-at-a-time into flat arrays — the columnar layout
  * the wire format already has — rather than the reference's
- * row-at-a-time boxed-enum cells (src/lib.rs:28-35).
+ * row-at-a-time boxed-enum cells (src/lib.rs:28-35). Spark scans decode
+ * with [[ColumnarDecoder]] instead, straight into column vectors;
+ * [[decode]] is the boxed reference it is pinned against, and serves
+ * the `Iterator[NativeBlock]` API of [[NativeBlockReader]].
  */
 object ColumnCodec {
-
-  /**
-   * Decode a full column, preserving dictionary structure for
-   * LowCardinality string columns (see [[NativeColumn]]).
-   */
-  def decodeColumn(in: Input, name: String, t: ChType, rows: Int): NativeColumn = t match {
-    case lc @ ChLowCardinality(ChString) =>
-      val out = new Array[Any](rows)
-      val (dict, ids) = decodeLowCardinality(in, lc, rows, out)
-      NativeColumn(name, t, out, dict, ids)
-    case _ =>
-      NativeColumn(name, t, decode(in, t, rows))
-  }
 
   /** Decode `rows` values of `t` from `in` into a Catalyst-value array. */
   def decode(in: Input, t: ChType, rows: Int): Array[Any] = {
@@ -238,19 +221,7 @@ object ColumnCodec {
         // 16 network-order bytes → expanded lowercase hex groups (pure
         // arithmetic; see ChIPv6 scaladoc for why not InetAddress)
         var i = 0
-        while (i < rows) {
-          val b = in.readBytes(16)
-          val sb = new java.lang.StringBuilder(39)
-          var g = 0
-          while (g < 8) {
-            if (g > 0) sb.append(':')
-            sb.append(java.lang.Integer.toHexString(
-              ((b(2 * g) & 0xff) << 8) | (b(2 * g + 1) & 0xff)))
-            g += 1
-          }
-          out(i) = UTF8String.fromString(sb.toString)
-          i += 1
-        }
+        while (i < rows) { out(i) = UTF8String.fromString(ipv6(in.readBytes(16), 0)); i += 1 }
       case ChBigInt(_, width, signed) =>
         // LE bytes → BigInteger → exact decimal string (the reference
         // emits `<unsupported:T>` sentinels here, src/lib.rs:137)
@@ -275,8 +246,8 @@ object ColumnCodec {
   }
 
   // LowCardinality serialization-type flags (ClickHouse wire format).
-  private val LcHasAdditionalKeys = 0x200L
-  private val LcIndexWidthMask = 0xffL
+  private[native] val LcHasAdditionalKeys = 0x200L
+  private[native] val LcIndexWidthMask = 0xffL
 
   /**
    * LowCardinality(T) dictionary wire layout:
@@ -293,14 +264,11 @@ object ColumnCodec {
    * The reference never decodes this — any LowCardinality column makes
    * it emit `<unsupported>` sentinels without consuming bytes,
    * corrupting every later column (src/lib.rs:168-170). Here it decodes
-   * to the inner type's Catalyst values via dictionary lookup.
-   *
-   * @return the dictionary and per-row indices (for the columnar
-   *         reader's dictionary-backed fill); `out` is filled with the
-   *         materialized per-row values either way.
+   * to the inner type's Catalyst values via dictionary lookup, filling
+   * `out`.
    */
   private def decodeLowCardinality(in: Input, lc: ChLowCardinality, rows: Int,
-      out: Array[Any]): (Array[Any], Array[Int]) = {
+      out: Array[Any]): Unit = {
     val version = in.readLongLE()
     if (version != 1L)
       throw new UnsupportedColumnException(s"${lc.name} (keys version $version)")
@@ -316,7 +284,6 @@ object ColumnCodec {
     val n = in.readLongLE().toInt
     require(n == rows, s"LowCardinality row count $n != block rows $rows")
     val width = (serType & LcIndexWidthMask).toInt
-    val ids = new Array[Int](rows)
     var i = 0
     while (i < rows) {
       val idx = width match {
@@ -325,11 +292,9 @@ object ColumnCodec {
         case 2 => in.readIntLE()
         case _ => in.readLongLE().toInt
       }
-      ids(i) = idx
       out(i) = if (nullable && idx == 0) null else dict(idx)
       i += 1
     }
-    (dict, ids)
   }
 
   /** Byte width for fixed-width types (None = variable). Used for skip-decode. */
@@ -347,16 +312,32 @@ object ColumnCodec {
     case _ => None
   }
 
-  /** `width` little-endian bytes → BigInteger (two's complement when
-    * signed, non-negative magnitude otherwise). */
-  private def readWideInt(in: Input, width: Int, signed: Boolean): java.math.BigInteger = {
-    val le = in.readBytes(width)
+  private def readWideInt(in: Input, width: Int, signed: Boolean): java.math.BigInteger =
+    wideInt(in.readBytes(width), 0, width, signed)
+
+  /** `width` little-endian bytes at `le(off)` → BigInteger (two's
+    * complement when signed, non-negative magnitude otherwise). */
+  private[native] def wideInt(le: Array[Byte], off: Int, width: Int,
+      signed: Boolean): java.math.BigInteger = {
     // reverse to big-endian; unsigned values get a 0x00 sign byte
     val be = new Array[Byte](if (signed) width else width + 1)
-    val off = if (signed) 0 else 1
+    val to = if (signed) 0 else 1
     var j = 0
-    while (j < width) { be(off + j) = le(width - 1 - j); j += 1 }
+    while (j < width) { be(to + j) = le(off + width - 1 - j); j += 1 }
     new java.math.BigInteger(be)
+  }
+
+  /** 16 network-order bytes at `b(off)` → expanded lowercase hex groups. */
+  private[native] def ipv6(b: Array[Byte], off: Int): String = {
+    val sb = new java.lang.StringBuilder(39)
+    var g = 0
+    while (g < 8) {
+      if (g > 0) sb.append(':')
+      sb.append(java.lang.Integer.toHexString(
+        ((b(off + 2 * g) & 0xff) << 8) | (b(off + 2 * g + 1) & 0xff)))
+      g += 1
+    }
+    sb.toString
   }
 
   /**
@@ -375,16 +356,11 @@ object ColumnCodec {
       in.skipFully(rows.toLong)
       skip(in, inner, rows)
     case ChArray(inner) =>
-      var last = 0L
-      var i = 0
-      while (i < rows) { last = in.readLongLE(); i += 1 }
-      skip(in, inner, last.toInt)
+      skip(in, inner, lastOffset(in, rows))
     case ChMap(kt, vt) =>
-      var last = 0L
-      var i = 0
-      while (i < rows) { last = in.readLongLE(); i += 1 }
-      skip(in, kt, last.toInt)
-      skip(in, vt, last.toInt)
+      val total = lastOffset(in, rows)
+      skip(in, kt, total)
+      skip(in, vt, total)
     case ChTuple(fields) =>
       fields.foreach { case (_, ft) => skip(in, ft, rows) }
     case lc: ChLowCardinality =>
@@ -403,6 +379,15 @@ object ColumnCodec {
       }
       in.skipFully(width.toLong * n)
     case other => throw new UnsupportedColumnException(other.name)
+  }
+
+  /** The element count of an array column (its last cumulative offset). */
+  private def lastOffset(in: Input, rows: Int): Int = {
+    var last = 0L
+    var i = 0
+    while (i < rows) { last = in.readLongLE(); i += 1 }
+    if (last < 0 || last > Int.MaxValue) throw new java.io.IOException(s"corrupt array offset $last")
+    last.toInt
   }
 
   /** Encode a column of Catalyst values (inverse of decode). */

@@ -4,6 +4,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputSt
 
 import graft.sources.native.NativeCodec.{Input, Output}
 
+import org.apache.spark.sql.vectorized.ColumnarBatch
+
 /**
  * Streaming block reader for the ClickHouse Native file format
  * (SURVEY §1.1):
@@ -23,32 +25,53 @@ import graft.sources.native.NativeCodec.{Input, Output}
  * (src/lib.rs:251, :271-274), this is a pull-based iterator: one block
  * in memory at a time, which is what lets a 100 TB scan stream.
  *
- * @param projection column names to materialize (None = all). Pruned
- *                   columns are skip-decoded (ColumnCodec.skip) — the
- *                   format is column-contiguous within a block, so
- *                   fixed-width columns cost a single seek.
+ * Two decoders read the same block walk: this class is an
+ * `Iterator[NativeBlock]` of boxed Catalyst values ([[ColumnCodec.decode]],
+ * the reference implementation), and a [[BatchSource]] whose
+ * [[nextBatch]] decodes straight into column vectors
+ * ([[ColumnarDecoder]]) — the path every Spark scan takes. Use one or
+ * the other on a reader, not both.
+ *
+ * @param projection column names the boxed iterator materializes (None
+ *                   = all). Pruned columns are skip-decoded
+ *                   (ColumnCodec.skip) — the format is column-contiguous
+ *                   within a block, so fixed-width columns cost a single
+ *                   seek. [[nextBatch]] prunes by its decoder's schema.
  * @param blockLimit stop after this many blocks (-1 = until EOF) —
  *                   how an intra-file split partition ([[NativeIndex]])
- *                   reads exactly its block range after seeking.
+ *                   reads exactly its block range after seeking. A
+ *                   stream that ends before the range does is truncated.
  */
 final class NativeBlockReader(stream: InputStream, projection: Option[Set[String]] = None,
     blockLimit: Int = -1)
-    extends Iterator[NativeBlock] with AutoCloseable {
+    extends Iterator[NativeBlock] with BatchSource {
 
   private val in = new Input(if (stream.isInstanceOf[BufferedInputStream]) stream
     else new BufferedInputStream(stream, 64 * 1024))
   private var nextBlock: NativeBlock = _
   private var blocksRead = 0
   private var finished = false
+  // the current block's header, set by nextHeader()
+  private var nCols = 0
+  private var nRows = 0
 
   override def hasNext: Boolean = {
-    if (finished) return false
     if (nextBlock != null) return true
-    if (blockLimit >= 0 && blocksRead >= blockLimit) { finished = true; close(); return false }
-    readBlock() match {
-      case Some(b) => nextBlock = b; true
-      case None => finished = true; close(); false
+    if (!nextHeader()) return false
+    val cols = Array.newBuilder[NativeColumn]
+    var c = 0
+    while (c < nCols) {
+      val name = in.readString()
+      val chType = ChType.parse(in.readString())
+      if (projection.forall(_.contains(name))) {
+        cols += NativeColumn(name, chType, ColumnCodec.decode(in, chType, nRows))
+      } else {
+        ColumnCodec.skip(in, chType, nRows)
+      }
+      c += 1
     }
+    nextBlock = NativeBlock(cols.result(), nRows)
+    true
   }
 
   override def next(): NativeBlock = {
@@ -58,33 +81,61 @@ final class NativeBlockReader(stream: InputStream, projection: Option[Set[String
     b
   }
 
-  private def readBlock(): Option[NativeBlock] = {
-    val nCols = in.tryReadVarUInt() match {
-      case None => return None // clean EOF between blocks
-      case Some(n) => n.toInt
+  override def nextBatch(decoder: ColumnarDecoder): ColumnarBatch =
+    if (nextHeader()) decoder.decodeBlock(in, nCols, nRows) else null
+
+  /**
+   * Read the next block's `n_columns, n_rows` header; false at the end
+   * of the stream or of the block range. Plausibility caps apply
+   * before anything is sized from the header.
+   */
+  private def nextHeader(): Boolean = {
+    if (finished) return false
+    if (blockLimit >= 0 && blocksRead >= blockLimit) { close(); return false }
+    val cols = in.tryReadVarUInt() match {
+      case None => // clean EOF between blocks
+        if (blockLimit >= 0) throw new java.io.EOFException(
+          s"stream ended after $blocksRead of $blockLimit blocks")
+        close()
+        return false
+      case Some(n) => n
     }
-    val nRows = in.readVarUInt().toInt
-    if (nCols == 0 || nRows == 0) return None // zero-row terminator (src/lib.rs:222)
-    val cols = Array.newBuilder[NativeColumn]
-    var c = 0
-    while (c < nCols) {
-      val name = in.readString()
-      val chType = ChType.parse(in.readString())
-      if (projection.forall(_.contains(name))) {
-        cols += ColumnCodec.decodeColumn(in, name, chType, nRows)
-      } else {
-        ColumnCodec.skip(in, chType, nRows)
-      }
-      c += 1
-    }
+    val rows = in.readVarUInt()
+    if (cols == 0 || rows == 0) { close(); return false } // zero-row terminator (src/lib.rs:222)
+    NativeBlockReader.checkShape(cols, rows)
+    nCols = cols.toInt
+    nRows = rows.toInt
     blocksRead += 1
-    Some(NativeBlock(cols.result(), nRows))
+    true
   }
 
-  override def close(): Unit = stream.close()
+  /** Ends the reader: `hasNext` is false from here on. */
+  override def close(): Unit = { finished = true; stream.close() }
 }
 
 object NativeBlockReader {
+  /**
+   * Block-header plausibility caps, checked before anything is sized
+   * from a header. Real servers cap blocks at max_block_size (default
+   * 65536; practical ceilings are low millions even with huge
+   * settings): 100M rows is ~1500× the default and far beyond anything
+   * a writer emits, mirroring the 64 MB frame cap on the compressed
+   * path. The typed [[ColumnarDecoder]] additionally grows every
+   * buffer and vector only as data arrives, so even a capped hostile
+   * count cannot allocate ahead of the bytes actually present.
+   */
+  val MaxBlockRows = 100000000L
+  val MaxBlockColumns = 1000000L
+
+  /** Fail with an `IOException` (message prefixed by `where`) on an
+    * implausible `n_columns, n_rows` block header. */
+  def checkShape(nCols: Long, nRows: Long, where: String = ""): Unit = {
+    if (nCols < 0 || nCols > MaxBlockColumns)
+      throw new java.io.IOException(s"${where}implausible column count $nCols in block")
+    if (nRows < 0 || nRows > MaxBlockRows)
+      throw new java.io.IOException(s"${where}implausible row count $nRows in block")
+  }
+
   /**
    * Read just the first block's per-column (name, type) headers —
    * bind-time schema inference without materializing data
@@ -95,8 +146,10 @@ object NativeBlockReader {
     in.tryReadVarUInt() match {
       case None => Seq.empty
       case Some(nColsL) =>
+        val nRowsL = in.readVarUInt()
+        checkShape(nColsL, nRowsL)
         val nCols = nColsL.toInt
-        val nRows = in.readVarUInt().toInt
+        val nRows = nRowsL.toInt
         val out = Seq.newBuilder[(String, ChType)]
         var c = 0
         while (c < nCols) {

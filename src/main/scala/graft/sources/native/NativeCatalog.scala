@@ -310,8 +310,8 @@ class NativeCatalog extends TableCatalog with SupportsNamespaces with FunctionCa
   /**
    * `ALTER TABLE ... ADD COLUMN` — METADATA-ONLY schema evolution, the
    * MergeTree contract: no part is rewritten, the new column simply
-   * does not exist in parts written before the ALTER and both
-   * partition readers null-fill absent columns per block (which is why
+   * does not exist in parts written before the ALTER and the scan's
+   * decoder null-fills absent columns per block (which is why
    * the added column MUST be nullable — its value in every old row IS
    * null). Writes after the ALTER carry the column. At any table size
    * this is one Properties-file rewrite — O(1) data IO, exactly what

@@ -20,9 +20,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * damage; this sidecar removes the bottleneck entirely for files WE
  * wrote: alongside `part.clickhouse` it records every block's byte
  * offset and row count in a hidden `.part.clickhouse.chidx` text file,
- * and the scan planner packs contiguous block ranges into
- * `spark.sql.files.maxPartitionBytes`-sized input partitions — the
- * same planning parquet gets from its row-group metadata. Readers seek
+ * and the scan planner packs contiguous block ranges into input
+ * partitions of Spark's file-split size (`FilePartition.maxSplitBytes`)
+ * — the same planning parquet gets from its row-group metadata. Readers seek
  * straight to their first block. Foreign files (clickhouse-local
  * output) have no sidecar and fall back to one partition per file,
  * unchanged.

@@ -3,8 +3,10 @@ package graft.sources.remote
 import java.io.{BufferedInputStream, BufferedOutputStream, IOException}
 import java.net.{InetSocketAddress, Socket}
 
-import graft.sources.native.NativeBlock
+import graft.sources.native.{ColumnarDecoder, NativeBlock}
 import graft.sources.native.NativeCodec.{Input, Output}
+
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import ChTcpProtocol._
 
@@ -49,25 +51,25 @@ final class ChTcpClient private (sock: Socket, rawIn: java.io.InputStream,
     out.flush()
     new RemoteBlockSource {
       private var done = false
-      private def blockBody(proj: Option[Set[String]]): NativeBlock = {
+      /** The block body of the packet just read: inside a per-block
+        * frame window when compressed (NOT closed — that would close the
+        * socket; the block decode drains it exactly). */
+      private def body[T](decode: Input => T): T = {
         in.readString() // temporary-table name
-        if (compress) {
-          // per-block frame window; do NOT close (that would close the
-          // socket) — the block decode drains it exactly
-          val frames = new graft.sources.native.FrameInputStream(rawIn, verify = true)
-          readBlockBody(new Input(frames), negotiated, proj)
-        } else readBlockBody(in, negotiated, proj)
+        if (compress) decode(new Input(new graft.sources.native.FrameInputStream(rawIn, verify = true)))
+        else decode(in)
       }
-      override def nextBlock(): Option[NativeBlock] = {
+      /** Packets up to the next Data block, decoded by `decode`. */
+      private def nextData[T](decode: Input => T): Option[T] = {
         if (done) return None
         while (true) {
           in.readVarUInt() match {
             case ServerPacket.Data =>
-              return Some(blockBody(projection))
+              return Some(body(decode))
             case ServerPacket.Progress => readProgress(in, negotiated)
             case ServerPacket.ProfileInfo => readProfileInfo(in)
             case ServerPacket.Totals | ServerPacket.Extremes =>
-              blockBody(Some(Set.empty)) // consume, skip-decode
+              body(readBlockBody(_, negotiated, Some(Set.empty))) // consume, skip-decode
             case ServerPacket.Log =>
               readBlock(in, negotiated, Some(Set.empty)) // never compressed
             case ServerPacket.Exception => throw readException(in)
@@ -80,6 +82,10 @@ final class ChTcpClient private (sock: Socket, rawIn: java.io.InputStream,
         }
         None // unreachable
       }
+      override def nextBlock(): Option[NativeBlock] =
+        nextData(readBlockBody(_, negotiated, projection))
+      override def nextBatch(decoder: ColumnarDecoder): ColumnarBatch =
+        nextData(readBatchBody(_, negotiated, decoder)).orNull
       override def close(): Unit = {
         // Abandoning mid-stream (driver schema probe after the header
         // block, a pushed LIMIT, a killed task): tell the server to

@@ -2,8 +2,10 @@ package graft.sources.remote
 
 import java.io.IOException
 
-import graft.sources.native.{ChType, ColumnCodec, NativeBlock, NativeColumn}
+import graft.sources.native.{ChType, ColumnarDecoder, ColumnCodec, NativeBlock, NativeBlockReader, NativeColumn}
 import graft.sources.native.NativeCodec.{Input, Output}
+
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
  * The ClickHouse native TCP protocol — hello handshake, protocol
@@ -231,41 +233,41 @@ object ChTcpProtocol {
 
   /** Block body only — what travels inside compressed frames when the
     * session negotiated compression (the packet code and table name
-    * stay outside the frames). */
+    * stay outside the frames). Boxed values; Spark scans use
+    * [[readBatchBody]]. */
   def readBlockBody(in: Input, negotiated: Long, projection: Option[Set[String]]): NativeBlock = {
-    readBlockInfo(in, negotiated)
-    // sanity caps BEFORE toInt: this is network input, and a corrupt or
-    // hostile length here must fail cleanly instead of wrapping
-    // negative (toInt) or driving an allocation OOM
-    val nColsL = in.readVarUInt()
-    val nRowsL = in.readVarUInt()
-    if (nColsL < 0 || nColsL > 1000000)
-      throw new IOException(s"clickhouse tcp: implausible column count $nColsL in block")
-    // Row cap is a plausibility bound, not Int.MaxValue: decodeColumn
-    // pre-allocates O(nRows) per column BEFORE payload bytes arrive, so
-    // a hostile 2^31-row header on a fixed-width column would allocate
-    // multi-GB from the header alone. Real servers cap blocks at
-    // max_block_size (default 65536; practical ceilings are low
-    // millions even with huge settings) — 100M is ~1500× the default
-    // and far beyond anything a server emits, mirroring the 64 MB
-    // frame cap on the compressed path.
-    if (nRowsL < 0 || nRowsL > 100000000L)
-      throw new IOException(s"clickhouse tcp: implausible row count $nRowsL in block")
-    val nCols = nColsL.toInt
-    val nRows = nRowsL.toInt
+    val (nCols, nRows) = readBlockShape(in, negotiated)
     val cols = Array.newBuilder[NativeColumn]
     var c = 0
     while (c < nCols) {
       val name = in.readString()
       val chType = ChType.parse(in.readString())
       if (projection.forall(_.contains(name))) {
-        cols += ColumnCodec.decodeColumn(in, name, chType, nRows)
+        cols += NativeColumn(name, chType, ColumnCodec.decode(in, chType, nRows))
       } else {
         ColumnCodec.skip(in, chType, nRows)
       }
       c += 1
     }
     NativeBlock(cols.result(), nRows)
+  }
+
+  /** [[readBlockBody]] decoded straight into `decoder`'s column vectors. */
+  def readBatchBody(in: Input, negotiated: Long, decoder: ColumnarDecoder): ColumnarBatch = {
+    val (nCols, nRows) = readBlockShape(in, negotiated)
+    decoder.decodeBlock(in, nCols, nRows)
+  }
+
+  /** BlockInfo, then the `n_columns, n_rows` header — capped BEFORE
+    * toInt: this is network input, and a corrupt or hostile length here
+    * must fail cleanly instead of wrapping negative or driving an
+    * allocation ([[NativeBlockReader.checkShape]]). */
+  private def readBlockShape(in: Input, negotiated: Long): (Int, Int) = {
+    readBlockInfo(in, negotiated)
+    val nCols = in.readVarUInt()
+    val nRows = in.readVarUInt()
+    NativeBlockReader.checkShape(nCols, nRows, "clickhouse tcp: ")
+    (nCols.toInt, nRows.toInt)
   }
 
   /** Progress payload (consumed for flow, not surfaced). */

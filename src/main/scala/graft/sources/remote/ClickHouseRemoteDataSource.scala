@@ -5,17 +5,18 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.native.{ChType, NativeBlockReader, NativeIO, SerializableHadoopConf}
+import graft.sources.native.{BatchPartitionReader, BatchRowReader, BatchSource, ChType, ColumnarDecoder,
+  NativeBlockReader, NativeIO, SerializableHadoopConf}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
  * `clickhouse_remote` — the Spark re-expression of the reference's
@@ -112,17 +113,18 @@ final case class TransportSpec(
    * file/socket transports are raw block byte streams; tcp interleaves
    * blocks with protocol packets, so the seam is block-level.
    */
-  def openSource(projection: Option[Set[String]]): RemoteBlockSource = transport match {
+  def openSource(): RemoteBlockSource = transport match {
     case "tcp" =>
       val (host, port) = hostPort
       ChTcpClient.connect(host, port, user, password, database, timeoutMs, tls)
-        .execute(query, projection, compress = compression)
+        .execute(query, None, compress = compression)
     case _ =>
       val reader = new NativeBlockReader(
-        graft.sources.native.NativeCompression.maybeWrapRead(open(), null), projection)
+        graft.sources.native.NativeCompression.maybeWrapRead(open(), null))
       new RemoteBlockSource {
         override def nextBlock(): Option[graft.sources.native.NativeBlock] =
           if (reader.hasNext) Some(reader.next()) else None
+        override def nextBatch(decoder: ColumnarDecoder): ColumnarBatch = reader.nextBatch(decoder)
         override def close(): Unit = reader.close()
       }
   }
@@ -136,7 +138,7 @@ final case class TransportSpec(
   def header(): Seq[(String, ChType)] = transport match {
     case "tcp" =>
       // the server's first Data packet is a rowless header block
-      val src = openSource(None)
+      val src = openSource()
       try src.nextBlock().map(_.columns.map(c => c.name -> c.chType).toSeq)
         .getOrElse(Seq.empty)
       finally src.close()
@@ -186,8 +188,13 @@ final case class TransportSpec(
   }
 }
 
-/** One open stream of Native blocks from the remote, however carried. */
-trait RemoteBlockSource extends AutoCloseable {
+/**
+ * One open stream of Native blocks from the remote, however carried:
+ * boxed blocks through [[nextBlock]] (its projection), or typed
+ * batches through [[nextBatch]] (the decoder's schema) — the path
+ * Spark scans take. Use one or the other on a source.
+ */
+trait RemoteBlockSource extends BatchSource {
   /** The next block (zero-row header blocks included), or None at end. */
   def nextBlock(): Option[graft.sources.native.NativeBlock]
 }
@@ -254,43 +261,16 @@ private[remote] class RemoteScan(required: StructType, spec: TransportSpec)
 
 private[remote] class RemoteReaderFactory(required: StructType)
     extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  /** Executor-side: open the transport, decode blocks into batches. */
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val spec = partition.asInstanceOf[RemotePartition].spec
+    new BatchPartitionReader(required, -1, None)(spec.openSource())
+  }
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new RemotePartitionReader(partition.asInstanceOf[RemotePartition].spec, required)
+    new BatchRowReader(createColumnarReader(partition))
 }
 
 private[remote] case class RemotePartition(spec: TransportSpec) extends InputPartition
-
-/** Executor-side: open the transport, stream blocks → InternalRows. */
-private[remote] class RemotePartitionReader(spec: TransportSpec, required: StructType)
-    extends PartitionReader[InternalRow] {
-
-  private val blocks = spec.openSource(Some(required.fieldNames.toSet))
-  private var colValues: Array[Array[Any]] = _
-  private var rowsInBlock = 0
-  private var rowIdx = 0
-  private val row = new GenericInternalRow(required.length)
-
-  override def next(): Boolean = {
-    while (rowIdx >= rowsInBlock) {
-      blocks.nextBlock() match {
-        case None => return false
-        case Some(block) =>
-          val byName = block.columns.map(c => c.name -> c).toMap
-          colValues = required.fields.map(f => byName.get(f.name).map(_.values).orNull)
-          rowsInBlock = block.numRows
-          rowIdx = 0
-      }
-    }
-    var i = 0
-    while (i < required.length) {
-      val c = colValues(i)
-      row.update(i, if (c == null) null else c(rowIdx))
-      i += 1
-    }
-    rowIdx += 1
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = blocks.close()
-}

@@ -1,0 +1,268 @@
+package graft.sources.native
+
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
+import java.nio.file.{Files, StandardCopyOption}
+
+import graft.SparkTestBase
+import graft.sources.native.ChType._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+/**
+ * The single typed scan path end to end: Spark's own split sizing, a
+ * reader that survives Spark closing it early, the limit counted in
+ * rows, and hostile files failing with an `IOException` that names
+ * the file — never an OOM, never wrong rows.
+ */
+class NativeScanSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+  private def tmpDir(tag: String): String =
+    Files.createTempDirectory(s"graft-scan-$tag").toString + "/out"
+  private def hadoopConf = spark.sessionState.newHadoopConf()
+
+  private val schema = StructType(Seq(
+    StructField("id", LongType), StructField("name", StringType), StructField("v", DoubleType)))
+
+  /** One indexed part file of `rows` rows (id, name, v): 65536-row blocks. */
+  private def writePart(tag: String, rows: Int, codec: String = "none"): (String, java.io.File) = {
+    import spark.implicits._
+    val dir = tmpDir(tag)
+    (1 to rows).map(i => (i.toLong, s"name_$i", i * 0.5)).toDF("id", "name", "v").coalesce(1)
+      .write.format("clickhouse_native").option("compression", codec).mode("overwrite").save(dir)
+    (dir, new java.io.File(dir).listFiles().filter(_.getName.endsWith(".clickhouse")).head)
+  }
+
+  private def sidecarOffsets(part: java.io.File): Seq[Long] = {
+    val p = new Path(part.toURI)
+    NativeIndex.read(p.getFileSystem(hadoopConf), p, part.length()).get.map(_.offset).toSeq
+  }
+
+  private def partitionsOf(df: DataFrame): Seq[NativeInputPartition] =
+    df.queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b }
+      .getOrElse(fail("no BatchScanExec in plan"))
+      .scan.toBatch.planInputPartitions().toSeq.map(_.asInstanceOf[NativeInputPartition])
+
+  private def rows(df: DataFrame): Seq[(Long, String, Double)] =
+    df.queryExecution.executedPlan.executeCollect().toSeq
+      .map(r => (r.getLong(0), r.getUTF8String(1).toString, r.getDouble(2)))
+
+  test("knnGraph over a native Array(Float32) scan (Spark ML zips the scan with itself)") {
+    val rnd = new scala.util.Random(7)
+    val data = new java.util.ArrayList[Row]()
+    (0 until 1500).foreach { i =>
+      val centre = i % 16
+      data.add(Row(i.toLong, Seq.tabulate(32)(d =>
+        ((centre * 31 + d) % 7 + 0.1 * rnd.nextGaussian()).toFloat)))
+    }
+    val vecSchema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = false), nullable = false)))
+    val dir = tmpDir("knn")
+    spark.createDataFrame(data, vecSchema).repartition(4)
+      .write.format("clickhouse_native").mode("overwrite").save(dir)
+    val vecs = spark.read.format("clickhouse_native").load(dir)
+    val edges = graft.operators.Similarity.knnGraph(vecs, 5, nlist = 16, nprobe = 2)
+    // every vector is a query: a reader cut short would lose rows
+    assert(edges.select("q_id").distinct().count() === 1500L)
+  }
+
+  test("a file above openCostInBytes splits at sidecar offsets and reads the same rows") {
+    val (dir, part) = writePart("split", 200000)
+    assert(part.length() > 4L * 1024 * 1024, "fixture must exceed the default openCostInBytes")
+    val df = spark.read.format("clickhouse_native").load(dir)
+    val parts = partitionsOf(df)
+    assert(parts.length >= 2, s"default maxPartitionBytes at local[4] should split: $parts")
+    val offsets = sidecarOffsets(part)
+    assert(parts.map(_.start).forall(offsets.contains), s"$parts vs $offsets")
+    assert(parts.map(_.blockCount).sum === offsets.length)
+    val unsplit = SparkTestBase.withSQLConf("spark.sql.files.openCostInBytes" -> (1L << 30).toString) {
+      val one = spark.read.format("clickhouse_native").load(dir)
+      assert(partitionsOf(one).length === 1)
+      rows(one)
+    }
+    assert(rows(df) === unsplit)
+    assert(unsplit.length === 200000)
+  }
+
+  test("a file below openCostInBytes plans one partition without reading its sidecar") {
+    val (dir, _) = writePart("small", 1000)
+    val parts = partitionsOf(spark.read.format("clickhouse_native").load(dir))
+    assert(parts.length === 1)
+    // the sidecar path always yields a block range; -1 = whole file, sidecar unread
+    assert(parts.head.blockCount === -1)
+  }
+
+  test("bucketed tables keep their bucketId on every split") {
+    import spark.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.splitns")
+    spark.sql("DROP TABLE IF EXISTS graft.splitns.wide")
+    spark.sql("""CREATE TABLE graft.splitns.wide (k BIGINT, payload STRING)
+                 USING clickhouse_native PARTITIONED BY (bucket(2, k))""")
+    (0L until 400000L).map(i => (i, f"payload-$i%08d-abcdefghijklmnopqrstuvwxyz"))
+      .toDF("k", "payload").writeTo("graft.splitns.wide").append()
+    val table = spark.table("graft.splitns.wide")
+    val parts = partitionsOf(table)
+    val byFile = parts.groupBy(_.file)
+    assert(byFile.values.exists(_.length >= 2), s"no file split: $parts")
+    parts.foreach { p =>
+      assert(p.bucketId === NativeBucket.bucketOfFile(new Path(p.file).getName).get, p)
+    }
+    assert(table.count() === 400000L)
+    spark.sql("DROP TABLE graft.splitns.wide")
+  }
+
+  test("a pushed limit is counted in rows by the reader") {
+    val (_, part) = writePart("limit", 100000)
+    val conf = new SerializableHadoopConf(hadoopConf)
+    val factory = new NativeReaderFactory(schema, 1000, conf)
+    val partition = NativeInputPartition(part.toURI.toString)
+    val batches = factory.createColumnarReader(partition)
+    var n = 0
+    try while (batches.next()) n += batches.get().numRows finally batches.close()
+    assert(n === 1000)
+    val rowReader = factory.createReader(partition)
+    var m = 0
+    var last = 0L
+    try while (rowReader.next()) { m += 1; last = rowReader.get().getLong(0) }
+    finally rowReader.close()
+    assert(m === 1000 && last === 1000L)
+  }
+
+  /** Every cause in the chain. */
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Seq.empty else t +: causes(t.getCause)
+
+  /** Reading `dir` (explicit schema: no header probe) must fail with the
+    * IOException that names `file`. */
+  private def failsNamingFile(dir: String, file: java.io.File, what: String): Unit = {
+    val e = intercept[Exception] {
+      spark.read.format("clickhouse_native").schema(schema).load(dir)
+        .selectExpr("sum(id)", "sum(length(name))", "sum(v)").collect()
+    }
+    assert(causes(e).exists {
+      case io: IOException => io.getMessage.contains("corrupt or truncated file") &&
+        io.getMessage.contains(file.getName)
+      case _ => false
+    }, s"$what: $e")
+  }
+
+  /** A copy of `part` (and its now-stale sidecar) rewritten by `edit`. */
+  private def corrupted(part: java.io.File, tag: String)(edit: Array[Byte] => Array[Byte])
+      : (String, java.io.File) = {
+    val dir = tmpDir(tag)
+    new java.io.File(dir).mkdirs()
+    val copy = new java.io.File(dir, part.getName)
+    Files.write(copy.toPath, edit(Files.readAllBytes(part.toPath)))
+    val sidecar = new java.io.File(part.getParent, s".${part.getName}.chidx")
+    Files.copy(sidecar.toPath, new java.io.File(dir, sidecar.getName).toPath,
+      StandardCopyOption.REPLACE_EXISTING)
+    (dir, copy)
+  }
+
+  private def varint(v: Long): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new NativeCodec.Output(bos)
+    out.writeVarUInt(v)
+    out.flush()
+    bos.toByteArray
+  }
+
+  test("truncated plain and lz4 files fail with an IOException naming the file") {
+    Seq("none", "lz4").foreach { codec =>
+      val (_, part) = writePart(s"trunc-$codec", 200000, codec)
+      val len = part.length()
+      val boundaries = sidecarOffsets(part).toSet + len
+      // cuts at a block boundary leave a valid shorter file, so every
+      // cut here lies strictly inside a block
+      // (a compressed file cut inside its first frame header is too
+      // short to sniff, so lz4 cuts start past it)
+      val cuts = ((if (codec == "none") Seq(1L, 5L) else Nil) ++
+        Seq(40L, len / 3, len / 2, len - 1)).filterNot(boundaries.contains)
+      assert(cuts.length >= 4)
+      cuts.foreach { cut =>
+        val (dir, copy) = corrupted(part, s"cut-$codec-$cut")(_.take(cut.toInt))
+        failsNamingFile(dir, copy, s"$codec cut at $cut of $len")
+      }
+    }
+  }
+
+  test("corrupted plain and lz4 files fail with an IOException naming the file, never OOM") {
+    val (_, plain) = writePart("corrupt-plain", 200000)
+    // block 0 header: n_columns = 3 (1 byte), n_rows = 65536 (3 bytes)
+    val header = Files.readAllBytes(plain.toPath).take(4).toSeq
+    assert(header === Seq[Byte](3, 0x80.toByte, 0x80.toByte, 4))
+    def withRows(n: Long)(b: Array[Byte]) = b.take(1) ++ varint(n) ++ b.drop(4)
+    // beyond the row cap: refused before anything is sized from it
+    val (d1, f1) = corrupted(plain, "rows-huge")(withRows(1L << 40))
+    failsNamingFile(d1, f1, "row count 2^40")
+    // under the cap: vectors grow only as bytes arrive, so the ~6 MB of
+    // data cannot become a 100M-row allocation before EOF
+    val (d2, f2) = corrupted(plain, "rows-capped")(withRows(NativeBlockReader.MaxBlockRows - 1))
+    failsNamingFile(d2, f2, "row count under the cap")
+    // the first string length (after the id column) → 1.5 GB
+    val bytes = Files.readAllBytes(plain.toPath)
+    val bis = new ByteArrayInputStream(bytes)
+    val in = new NativeCodec.Input(bis)
+    in.readVarUInt()
+    val n = in.readVarUInt().toInt
+    in.readString()
+    ColumnCodec.skip(in, ChType.parse(in.readString()), n)
+    in.readString()
+    if (ChType.parse(in.readString()).isInstanceOf[ChNullable]) in.skipFully(n.toLong)
+    val firstName = bytes.length - bis.available()
+    assert(bytes(firstName) === "name_1".length)
+    val (d3, f3) = corrupted(plain, "strlen")(b =>
+      b.take(firstName) ++ varint(1500000000L) ++ b.drop(firstName + 1))
+    failsNamingFile(d3, f3, "string length 1.5 GB")
+    // lz4: any flipped payload byte fails its frame checksum
+    val (_, lz4) = writePart("corrupt-lz4", 200000, "lz4")
+    val mid = (lz4.length() / 2).toInt
+    val (d4, f4) = corrupted(lz4, "flip")(b => { b(mid) = (b(mid) ^ 0x5a).toByte; b })
+    failsNamingFile(d4, f4, "lz4 byte flip")
+  }
+
+  test("hostile block structure fails with an IOException in the typed decoder") {
+    def block(cols: (String, String, NativeCodec.Output => Unit)*)(rows: Int): Array[Byte] = {
+      val bos = new ByteArrayOutputStream()
+      val out = new NativeCodec.Output(bos)
+      out.writeVarUInt(cols.length.toLong)
+      out.writeVarUInt(rows.toLong)
+      cols.foreach { case (n, t, body) => out.writeString(n); out.writeString(t); body(out) }
+      out.flush()
+      bos.toByteArray
+    }
+    def decodeFails(bytes: Array[Byte], dt: DataType, expect: String): Unit = {
+      val reader = new NativeBlockReader(new ByteArrayInputStream(bytes))
+      val e = intercept[IOException] {
+        reader.nextBatch(new ColumnarDecoder(StructType(Seq(StructField("a", dt)))))
+      }
+      assert(e.getMessage.contains(expect), e.getMessage)
+    }
+    // array end offsets that go backwards
+    decodeFails(block(("a", "Array(Int32)", out => {
+      out.writeLongLE(5L); out.writeLongLE(3L); (0 until 5).foreach(out.writeIntLE)
+    }))(2), ArrayType(IntegerType, containsNull = false), "corrupt array offsets")
+    // LowCardinality index outside its dictionary
+    val lcHeader = (out: NativeCodec.Output) => {
+      out.writeLongLE(1L); out.writeLongLE(ColumnCodec.LcHasAdditionalKeys)
+    }
+    decodeFails(block(("a", "LowCardinality(String)", out => {
+      lcHeader(out); out.writeLongLE(1L); out.writeString("x")
+      out.writeLongLE(2L); out.writeByte(0); out.writeByte(7)
+    }))(2), StringType, "outside a dictionary of 1")
+    // dictionary size beyond any column
+    decodeFails(block(("a", "LowCardinality(String)", out => {
+      lcHeader(out); out.writeLongLE(1L << 40)
+    }))(2), StringType, "implausible LowCardinality dictionary size")
+    // a string length beyond 2 GiB
+    decodeFails(block(("a", "String", out => out.writeVarUInt(1L << 33)))(1),
+      StringType, "too large")
+    // a schema that disagrees with the data
+    decodeFails(block(("a", "Int32", out => out.writeIntLE(1)))(1), LongType,
+      "in the read schema")
+  }
+}

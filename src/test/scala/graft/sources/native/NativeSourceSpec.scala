@@ -176,14 +176,15 @@ class NativeSourceSpec extends AnyFunSuite {
     assert(agg.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
   }
 
-  test("array-schema native scans stay on the row path and remain correct") {
+  test("array-schema native scans execute columnar and remain correct") {
     val src = spark.read.parquet(s"${SparkTestBase.sfDir}/embeddings.parquet")
     val dir = tmpDir("rowplan")
     src.write.format("clickhouse_native").mode("overwrite").save(dir)
     val back = spark.read.format("clickhouse_native").load(dir)
     back.collect()
-    assert(!back.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(back.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(back.count() === src.count())
+    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
   }
 
   test("DSv2 roundtrip: map and struct columns (Map/Tuple wire types)") {

@@ -53,8 +53,11 @@ class RuntimeFilterSpec extends AnyFunSuite {
     val attrs = scan.filterAttributes().map(_.fieldNames().mkString(".")).toSet
     assert(attrs === Set("id", "payload"))
 
-    // whole small file = one partition before any filter arrives
-    val before = scan.planInputPartitions()
+    // a file within the split target = one partition before any filter
+    // arrives (minPartitionNum=1 lifts the target above this ~7 MB file;
+    // at the default, Spark's split rule would fan it out over the cores)
+    val before = SparkTestBase.withSQLConf("spark.sql.files.minPartitionNum" -> "1")(
+      scan.planInputPartitions())
     assert(before.length === 1)
     assert(before(0).asInstanceOf[NativeInputPartition].blockCount === -1)
 
