@@ -784,7 +784,7 @@ object Bench {
     // A storm can inflate EVERY rep of a min-of-3 key (r10:
     // scale_dedup_10x [14.1, 19.6, 16.6] in the driver sweep vs a
     // 2.9 s isolated steady floor on a quiet host, and scale_cc_1x
-    // 11.4 vs 1.9 — tools/dedup_cc_repeat.scala, 9 reps each, zero
+    // 11.4 vs 1.9 — BENCH_NOTES round 11 rep studies, 9 reps each, zero
     // stall, zero heap ratchet). The sweep value always stands; any
     // instrumented key that measured > 3× its recorded quiet-host
     // floor is re-measured min-of-2 at the END of the sweep and

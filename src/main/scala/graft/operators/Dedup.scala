@@ -167,7 +167,7 @@ object Dedup {
     * shuffle-hash verify fetches (no stream-side sort of wide candidate
     * rows) + unconditional sort-merge candidates (content keys skew).
     * The r8 small-corpus broadcast bypass was re-measured with an
-    * interleaved same-session conf A/B (tools/r15_contain_conf_ab.scala,
+    * interleaved same-session conf A/B (OPTIMIZATION_r15.md §3,
     * ngram as the conf-invariant noise control): the bypass costs the
     * 10x scale point 12-19% (bypass 7.12/7.06/7.04 s vs pinned
     * 5.71/6.56/6.26 s across three interleaved rounds) for a ~0.1 s win
@@ -225,7 +225,7 @@ object Dedup {
     // --- verify: fetch both signatures by id, estimate, threshold --------
     // UNCONDITIONAL shuffle-hash fetches (r14): the small-corpus
     // broadcast bypass was re-measured for this operator specifically
-    // (tools/r14_bypass_ab.scala, autoBroadcastJoinThreshold -1 == the
+    // (OPTIMIZATION_r14.md §7, autoBroadcastJoinThreshold -1 == the
     // fully-pinned plan, same session): bypass-on 1.67/3.11 s at
     // 1×/10× vs pinned 1.04/2.57 — the broadcast plans stream the raw
     // scan's few input splits through the verify, the same parallelism
@@ -648,16 +648,15 @@ object Dedup {
     // This arrays shape was re-litigated in round 13 against the
     // inverted-index alternative the SSJoin literature suggests (and
     // the round-12 verdict asked about): counting the overlap via a
-    // thin (id_b, g) key join ([[containmentPairsExactKeyVerify]])
-    // instead of shipping sh_a per candidate pair. Measured same-binary
-    // A/B at sf0.1 (tools/containment_verify_ab.scala, identical pair
-    // sets asserted): the key join is 1.9× SLOWER (18.2 vs 9.5 s at
+    // thin (id_b, g) key join instead of shipping sh_a per candidate
+    // pair. Measured same-binary A/B at sf0.1 (BENCH_NOTES round 13,
+    // identical pair sets asserted): the key join is 1.9× SLOWER (18.2 vs 9.5 s at
     // 10×) and ships 2.1× MORE shuffle bytes (1158 vs 542 MB) — the
     // per-pair containee keys explode to Σ_pairs n_a ≈ 50M 32-byte
     // rows, where this shape ships the same elements as ONE 8-byte-
     // packed array row per pair, and the container side never ships
     // per pair at all (it is the [[fetchSide]] hash build, corpus-sized
-    // once). Decomposition (tools/containment_decompose.scala): the
+    // once). Decomposition (BENCH_NOTES round 13): the
     // whole verify stage is 0.7 s of the 5.9 s 10× pipeline — the cost
     // center is the candidate machinery, which BENCH_NOTES round 13
     // shows is spread evenly across its information-bearing stages.
@@ -670,44 +669,6 @@ object Dedup {
       .filter(least(col("n_a"), col("n_b")).cast("double") >=
         lit(theta) * col("n_a") - lit(1e-6))
       .withColumn("containment", inter / col("n_a"))
-      .filter(col("containment") >= theta)
-      .select(col("id_a"), col("id_b"), round(col("containment"), 4).as("containment"))
-  }
-
-  /**
-   * Round-13 A/B shape, kept callable so the measurement is
-   * reproducible (tools/containment_verify_ab.scala): containment
-   * verify via the inverted-index key join — overlap counted by
-   * joining the containee's exploded df>1 shingle keys against the
-   * per-doc (id_b, g) key set, the container's shingles crossing the
-   * wire once as a corpus-sized hash build instead of per pair.
-   * Output-identical to [[containmentPairsExact]] (pairs with zero
-   * df>1 overlap drop out of the inner join — correct, since θ > 0
-   * requires overlap ≥ θ·n_a ≥ 1; df=1 shingles exist in one doc
-   * corpus-wide and can never be shared, so the join emits exactly
-   * |A∩B| rows per pair). MEASURED WORSE than the production arrays
-   * shape — 1.9× wall, 2.1× shuffle bytes, 9.4× shuffle records at
-   * sf0.1 10× — because the thin rows un-pack the array payload into
-   * Σ_pairs n_a individual 32-byte rows. Not the production path —
-   * public only so the shell A/B harness (tools/) stays runnable;
-   * output identity vs the production shape is pinned in LlmOpsSpec.
-   */
-  def containmentPairsExactKeyVerify(df: DataFrame,
-      idCol: String, textCol: String, theta: Double,
-      shingleN: Int = 3): DataFrame = {
-    val po = prefixOrdered(shingledOf(df, idCol, textCol, shingleN), theta,
-      ContainmentStrategy)
-    val cand = containmentCandidatesFromPo(po, theta)
-    val allKeys = po.keys(None)
-    val aK = allKeys.select(col("id").as("id_a"), col("n").as("n_a"), col("g"))
-    val bK = allKeys.select(col("id").as("bk_id"), col("g").as("bk_g"))
-    cand
-      .join(ContainmentStrategy.fetch(aK), "id_a")
-      .join(ContainmentStrategy.fetch(bK),
-        col("id_b") === col("bk_id") && col("g") === col("bk_g"))
-      .groupBy("id_a", "id_b", "n_a")
-      .agg(count(lit(1)).cast("double").as("inter"))
-      .withColumn("containment", col("inter") / col("n_a"))
       .filter(col("containment") >= theta)
       .select(col("id_a"), col("id_b"), round(col("containment"), 4).as("containment"))
   }

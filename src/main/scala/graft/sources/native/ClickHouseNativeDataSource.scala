@@ -1,12 +1,13 @@
 package graft.sources.native
 
+import java.io.IOException
 import java.util
 import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -57,24 +58,11 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conf = NativeIO.sessionHadoopConf()
     val paths = NativeIO.paths(options)
-    val files = NativeIO.resolveFiles(paths, conf)
+    val files = NativeIO.resolveFileStatuses(paths, conf)
     if (files.isEmpty)
       // A typo'd path must fail loudly, not scan as 0 rows.
       throw new IllegalArgumentException(
         s"clickhouse_native: no files found for path(s): ${paths.mkString(", ")}")
-    // The sidecar's writer-declared compression rides into the probe —
-    // same authority as the partition readers use — so files this
-    // writer produced are never sniffed at schema time either (and
-    // checksum=skip, which forbids sniffing, still works here).
-    def headerOf(p: Path): Seq[(String, ChType)] = {
-      val fs = p.getFileSystem(conf)
-      val declared =
-        try NativeIndex.readWithMeta(fs, p, fs.getFileStatus(p).getLen)
-          .flatMap(_._2.get("compression"))
-        catch { case _: java.io.IOException => None }
-      val s = NativeCompression.maybeWrapRead(fs.open(p), conf, declared)
-      try NativeBlockReader.readHeader(s) finally s.close()
-    }
     if (options.getBoolean("mergeSchema", false)) {
       // Schema evolution: the UNION of every readable file header, in
       // first-seen column order — the layout a long-lived table has
@@ -88,7 +76,8 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
       // Cost: one driver-side header read per file (the first block
       // header only, not data) — O(files) at bind time, the same
       // contract parquet's mergeSchema accepts.
-      val headers = files.map(p => p -> headerOf(p)).filter(_._2.nonEmpty)
+      val headers = files.map(st => st.getPath -> NativeIO.header(st, conf))
+        .filter(_._2.nonEmpty)
       if (headers.isEmpty)
         throw new IllegalArgumentException(
           s"clickhouse_native: ${files.length} file(s) matched but none has a " +
@@ -152,7 +141,7 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
     } else {
       // First file with a readable header wins (tolerates empty files
       // from other writers; our own writer no longer produces them).
-      val header = files.iterator.map(headerOf)
+      val header = files.iterator.map(NativeIO.header(_, conf))
         .find(_.nonEmpty).getOrElse(
           // all files headerless → fail loudly, same policy as no-files
           throw new IllegalArgumentException(
@@ -208,6 +197,44 @@ private[sources] object NativeIO {
       }
     }.sortBy(_.getPath.toString)
   }
+
+  /**
+   * The first block's (name, type) headers of one data file, read
+   * without touching data. The validated sidecar's writer-declared
+   * compression rides into the probe — the same authority the
+   * partition readers use — so files this writer produced are never
+   * sniffed (and checksum=skip, which forbids sniffing, still works);
+   * an unreadable sidecar means sniff.
+   */
+  def header(st: FileStatus, conf: Configuration): Seq[(String, ChType)] = {
+    val p = st.getPath
+    val fs = p.getFileSystem(conf)
+    val in = NativeCompression.maybeWrapRead(fs.open(p), conf,
+      NativeIndex.declaredCompression(fs, p, st.getLen))
+    try NativeBlockReader.readHeader(in) finally in.close()
+  }
+
+  /** (rows, blocks) of one data file from a walk over its block
+    * headers — no value is decoded. A corrupt or truncated file fails
+    * with an IOException naming it. */
+  def walkRowCount(p: Path, conf: Configuration): (Long, Int) = namingFile(p.toString) {
+    val blocks = new NativeBlockReader(
+      NativeCompression.maybeWrapRead(p.getFileSystem(conf).open(p), conf), Some(Set.empty))
+    var rows = 0L
+    var n = 0
+    try while (blocks.hasNext) { rows += blocks.next().numRows; n += 1 }
+    finally blocks.close()
+    (rows, n)
+  }
+
+  /** Run `body`, rethrowing its IOException with `file` named. */
+  def namingFile[T](file: String)(body: => T): T =
+    try body
+    catch {
+      case e: IOException =>
+        throw new IOException(
+          s"clickhouse_native: corrupt or truncated file $file: ${e.getMessage}", e)
+    }
 }
 
 private[native] class NativeTable(tableSchema: StructType, paths: Seq[String],
@@ -237,85 +264,13 @@ private[native] class NativeTable(tableSchema: StructType, paths: Seq[String],
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new NativeScanBuilder(tableSchema, paths, bucket)
 
-  /** Write option with table-property fallback (catalog tables persist defaults). */
-  private def opt(info: LogicalWriteInfo, key: String): Option[String] =
-    Option(info.options.get(key)).orElse(tableProps.get(key))
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // Validate at write-build time: 0/negative would rotate on every
-    // row (one part file per input row at scale), and a non-numeric
-    // value should name the option, not surface a bare
-    // NumberFormatException from inside a task.
-    val maxRows = opt(info, "maxRowsPerFile").map { v =>
-      val n = v.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"clickhouse_native write option maxRowsPerFile must be a positive integer, got '$v'"))
-      if (n <= 0) throw new IllegalArgumentException(
-        s"clickhouse_native write option maxRowsPerFile must be > 0, got $n")
-      n
-    }.getOrElse(8 * 1024 * 1024)
-    val dictEncode = opt(info, "dictionaryEncode").getOrElse("auto") match {
-      case "auto" => true
-      case "off" => false
-      case other => throw new IllegalArgumentException(
-        s"clickhouse_native write option dictionaryEncode must be 'auto' or 'off', got '$other'")
-    }
-    val compression = opt(info, "compression").getOrElse("none")
-    NativeCompression.methodFor(compression) // validate at plan time
-    // sortBy (option or table property): comma-separated columns the
-    // incoming rows are sorted by per write task BEFORE the writer
-    // runs — block zone maps over a sorted layout prune range/point
-    // queries to O(matching blocks) instead of "all blocks overlap".
-    val sortBy = opt(info, "sortBy").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    val insertDedup = opt(info, "insertDedup").getOrElse("false") match {
-      case "true" => true
-      case "false" => false
-      case other => throw new IllegalArgumentException(
-        s"clickhouse_native write option insertDedup must be 'true' or 'false', got '$other'")
-    }
-    // dedup-identity scope (CH's insert_deduplication_token): when set,
-    // a new part only dedups against pre-existing parts carrying the
-    // SAME token — so two epochs/jobs with legitimately identical
-    // content both land, while a RETRY of one job (same token) stays a
-    // no-op. Empty (default) = pure content identity, as before.
-    val insertDedupToken = opt(info, "insertDedupToken").getOrElse("")
-    // columnTypes: declare columns as CH types the writer cannot infer
-    // from Spark's type system — the CAST-at-insert ETL idiom. Uses:
-    // STRING columns as UUID / IPv4 / IPv6 (16/4/16-byte binary on the
-    // wire instead of var-length text), Enum8/Enum16 (1/2-byte codes),
-    // or FixedString(n) (NUL-padded fixed slots; too-long values fail
-    // the write like a CH INSERT); decode returns the same strings.
-    // Entries split at
-    // TOP-LEVEL commas only — an Enum declaration's own commas stay
-    // inside it. Validated here so a typo is one clean plan-time error.
-    val typeOverrides: Map[String, String] =
-      opt(info, "columnTypes").map(ChType.splitTopLevel(_).map(_.trim).filter(_.nonEmpty)
-        .map { e =>
-          val i = e.indexOf(':')
-          if (i <= 0 || i == e.length - 1) throw new IllegalArgumentException(
-            s"clickhouse_native write option columnTypes: expected 'col:Type', got '$e'")
-          val (c, tn) = (e.substring(0, i).trim, e.substring(i + 1).trim)
-          val f = info.schema().fields.find(_.name == c).getOrElse(
-            throw new IllegalArgumentException(
-              s"clickhouse_native columnTypes: column '$c' not in write schema"))
-          val parsed = ChType.parse(tn)
-          // read-only types: wide ints / wide decimals decode to exact
-          // strings but have no encoder (no Spark source type for them)
-          if (parsed.isInstanceOf[ChType.ChUnsupported] ||
-              parsed.isInstanceOf[ChType.ChBigInt] ||
-              parsed.isInstanceOf[ChType.ChWideDecimal])
-            throw new IllegalArgumentException(
-              s"clickhouse_native columnTypes: type '$tn' is not writable")
-          if (parsed.sparkType != f.dataType) throw new IllegalArgumentException(
-            s"clickhouse_native columnTypes: column '$c' is ${f.dataType}, " +
-              s"but CH type '$tn' decodes as ${parsed.sparkType}")
-          c -> parsed.name
-        }.toMap).getOrElse(Map.empty)
-    new NativeWriteBuilder(info.schema(), paths.headOption.getOrElse(
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new NativeWriteBuilder(NativeWriteOptions.parse(info.schema(),
+      paths.headOption.getOrElse(
         throw new IllegalArgumentException("clickhouse_native write requires a path")),
-      maxRows, dictEncode, compression, bucket, sortBy, insertDedup, insertDedupToken,
-      typeOverrides)
-  }
+      bucket,
+      // write option with table-property fallback (catalog tables persist defaults)
+      key => Option(info.options.get(key)).orElse(tableProps.get(key))))
 }
 
 private[native] class NativeScanBuilder(fullSchema: StructType, paths: Seq[String],
@@ -516,13 +471,9 @@ private[native] class NativeCountReaderFactory(conf: SerializableHadoopConf)
         val fs = path.getFileSystem(conf.value)
         // Indexed file: the row count is in the sidecar — a count(*)
         // over an indexed directory never opens a data file at all.
-        NativeIndex.read(fs, path, fs.getFileStatus(path).getLen) match {
-          case Some(entries) => count = entries.map(_.rows).sum
-          case None =>
-            val blocks = new NativeBlockReader(
-              NativeCompression.maybeWrapRead(fs.open(path), conf.value), Some(Set.empty))
-            try while (blocks.hasNext) count += blocks.next().numRows
-            finally blocks.close()
+        count = NativeIndex.read(fs, path, fs.getFileStatus(path).getLen) match {
+          case Some(entries) => entries.map(_.rows).sum
+          case None => NativeIO.walkRowCount(path, conf.value)._1
         }
         emitted = true
         true
@@ -777,11 +728,98 @@ private[native] class NativeReaderFactory(required: StructType, limit: Int,
 // Write path
 // ---------------------------------------------------------------------------
 
-private[native] class NativeWriteBuilder(schema: StructType, path: String, maxRowsPerFile: Int,
-    dictEncode: Boolean, compression: String = "none",
-    bucket: Option[(String, Int)] = None, sortBy: Seq[String] = Seq.empty,
-    insertDedup: Boolean = false, dedupToken: String = "",
-    typeOverrides: Map[String, String] = Map.empty)
+/**
+ * Every write option, parsed and validated once at write-build time
+ * ([[NativeTable.newWriteBuilder]]) and carried as one value from the
+ * builder to each task writer. Field defaults are the option defaults.
+ */
+private[native] case class NativeWriteOptions(schema: StructType, path: String,
+    maxRowsPerFile: Int = NativeWriteOptions.DefaultMaxRowsPerFile, dictEncode: Boolean = true,
+    compression: String = "none", bucket: Option[(String, Int)] = None,
+    sortBy: Seq[String] = Seq.empty, insertDedup: Boolean = false,
+    dedupToken: String = "", typeOverrides: Map[String, String] = Map.empty)
+
+private[native] object NativeWriteOptions {
+  val DefaultMaxRowsPerFile: Int = 8 * 1024 * 1024
+
+  /** Parse the write options `opt` yields (write option, else table property). */
+  def parse(schema: StructType, path: String, bucket: Option[(String, Int)],
+      opt: String => Option[String]): NativeWriteOptions = {
+    // Validate at write-build time: 0/negative would rotate on every
+    // row (one part file per input row at scale), and a non-numeric
+    // value should name the option, not surface a bare
+    // NumberFormatException from inside a task.
+    val maxRows = opt("maxRowsPerFile").map { v =>
+      val n = v.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"clickhouse_native write option maxRowsPerFile must be a positive integer, got '$v'"))
+      if (n <= 0) throw new IllegalArgumentException(
+        s"clickhouse_native write option maxRowsPerFile must be > 0, got $n")
+      n
+    }.getOrElse(DefaultMaxRowsPerFile)
+    val dictEncode = opt("dictionaryEncode").getOrElse("auto") match {
+      case "auto" => true
+      case "off" => false
+      case other => throw new IllegalArgumentException(
+        s"clickhouse_native write option dictionaryEncode must be 'auto' or 'off', got '$other'")
+    }
+    val compression = opt("compression").getOrElse("none")
+    NativeCompression.methodFor(compression) // validate at plan time
+    // sortBy (option or table property): comma-separated columns the
+    // incoming rows are sorted by per write task BEFORE the writer
+    // runs — block zone maps over a sorted layout prune range/point
+    // queries to O(matching blocks) instead of "all blocks overlap".
+    val sortBy = opt("sortBy").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq.empty)
+    val insertDedup = opt("insertDedup").getOrElse("false") match {
+      case "true" => true
+      case "false" => false
+      case other => throw new IllegalArgumentException(
+        s"clickhouse_native write option insertDedup must be 'true' or 'false', got '$other'")
+    }
+    // dedup-identity scope (CH's insert_deduplication_token): when set,
+    // a new part only dedups against pre-existing parts carrying the
+    // SAME token — so two epochs/jobs with legitimately identical
+    // content both land, while a RETRY of one job (same token) stays a
+    // no-op. Empty (default) = pure content identity, as before.
+    val insertDedupToken = opt("insertDedupToken").getOrElse("")
+    // columnTypes: declare columns as CH types the writer cannot infer
+    // from Spark's type system — the CAST-at-insert ETL idiom. Uses:
+    // STRING columns as UUID / IPv4 / IPv6 (16/4/16-byte binary on the
+    // wire instead of var-length text), Enum8/Enum16 (1/2-byte codes),
+    // or FixedString(n) (NUL-padded fixed slots; too-long values fail
+    // the write like a CH INSERT); decode returns the same strings.
+    // Entries split at
+    // TOP-LEVEL commas only — an Enum declaration's own commas stay
+    // inside it. Validated here so a typo is one clean plan-time error.
+    val typeOverrides: Map[String, String] =
+      opt("columnTypes").map(ChType.splitTopLevel(_).map(_.trim).filter(_.nonEmpty)
+        .map { e =>
+          val i = e.indexOf(':')
+          if (i <= 0 || i == e.length - 1) throw new IllegalArgumentException(
+            s"clickhouse_native write option columnTypes: expected 'col:Type', got '$e'")
+          val (c, tn) = (e.substring(0, i).trim, e.substring(i + 1).trim)
+          val f = schema.fields.find(_.name == c).getOrElse(
+            throw new IllegalArgumentException(
+              s"clickhouse_native columnTypes: column '$c' not in write schema"))
+          val parsed = ChType.parse(tn)
+          // read-only types: wide ints / wide decimals decode to exact
+          // strings but have no encoder (no Spark source type for them)
+          if (parsed.isInstanceOf[ChType.ChUnsupported] ||
+              parsed.isInstanceOf[ChType.ChBigInt] ||
+              parsed.isInstanceOf[ChType.ChWideDecimal])
+            throw new IllegalArgumentException(
+              s"clickhouse_native columnTypes: type '$tn' is not writable")
+          if (parsed.sparkType != f.dataType) throw new IllegalArgumentException(
+            s"clickhouse_native columnTypes: column '$c' is ${f.dataType}, " +
+              s"but CH type '$tn' decodes as ${parsed.sparkType}")
+          c -> parsed.name
+        }.toMap).getOrElse(Map.empty)
+    NativeWriteOptions(schema, path, maxRows, dictEncode, compression, bucket, sortBy,
+      insertDedup, insertDedupToken, typeOverrides)
+  }
+}
+
+private[native] class NativeWriteBuilder(o: NativeWriteOptions)
     extends WriteBuilder with SupportsTruncate with SupportsOverwrite {
   private var truncateFirst = false
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
@@ -797,76 +835,58 @@ private[native] class NativeWriteBuilder(schema: StructType, path: String, maxRo
         "matching rows in place, which the Native format cannot do. " +
         "Use overwritePartitions/truncate, or rewrite the full table.")
 
+  /**
+   * The one Write, batch and streaming. A bucketed write clusters the
+   * incoming rows by bucket id BEFORE the writers run: each bucket then
+   * lands in exactly ONE write task, so an insert produces N part files
+   * total instead of up to tasks × N (at 100 TB ingest, the difference
+   * between N and hundreds of thousands of small files). sortBy columns
+   * additionally sort rows WITHIN each task, so every block's zone maps
+   * cover a disjoint range and range scans prune to O(matching blocks).
+   * Advisory, not strict — if the bucket function can't be resolved
+   * Spark writes unclustered and the per-row routing still produces
+   * correct (more numerous) single-bucket files. With neither bucket
+   * nor sortBy the distribution is unspecified and the ordering empty,
+   * and Spark leaves the input plan unchanged.
+   */
   override def build(): Write = {
     // Validate the schema driver-side at planning, so an unsupported
     // type is one clean error, not a stage failure inside a task.
-    schema.fields.foreach(f => ChType.forSpark(f.dataType, f.nullable))
-    bucket.foreach { case (col, _) =>
-      val f = schema.fields.find(_.name == col).getOrElse(
+    o.schema.fields.foreach(f => ChType.forSpark(f.dataType, f.nullable))
+    o.bucket.foreach { case (col, _) =>
+      val f = o.schema.fields.find(_.name == col).getOrElse(
         throw new IllegalArgumentException(
           s"clickhouse_native bucketed write: bucket column '$col' not in input schema"))
       if (!NativeBucket.supported(f.dataType))
         throw new IllegalArgumentException(
           s"clickhouse_native bucketed write: bucket column type ${f.dataType} unsupported")
     }
-    sortBy.foreach { col =>
-      if (!schema.fieldNames.contains(col))
+    o.sortBy.foreach { col =>
+      if (!o.schema.fieldNames.contains(col))
         throw new IllegalArgumentException(
           s"clickhouse_native write: sortBy column '$col' not in input schema")
     }
-    if (bucket.isEmpty && sortBy.isEmpty)
-      new Write {
-        override def toBatch: BatchWrite =
-          new NativeBatchWrite(schema, path, truncateFirst, maxRowsPerFile, dictEncode,
-            compression, bucket, insertDedup, dedupToken, typeOverrides)
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          // validated but not implemented for streaming epochs — fail
-          // loudly rather than silently appending duplicate batches
-          // the user asked to have deduplicated
-          if (insertDedup) throw new UnsupportedOperationException(
-            "clickhouse_native: insertDedup is not supported for streaming writes " +
-              "(exactly-once replay protection comes from the epoch-scoped sink itself)")
-          new NativeStreamingWrite(schema, path, maxRowsPerFile, dictEncode, compression, bucket, typeOverrides)
-        }
+    new Write with RequiresDistributionAndOrdering {
+      import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+      import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+      override def requiredDistribution(): Distribution = o.bucket match {
+        case Some((col, n)) => Distributions.clustered(Array(Expressions.bucket(n, col)))
+        case None => Distributions.unspecified()
       }
-    else
-      // Cluster the incoming rows by bucket id BEFORE the writers run:
-      // each bucket then lands in exactly ONE write task, so an insert
-      // produces N part files total instead of up to tasks × N (at
-      // 100 TB ingest, the difference between N and hundreds of
-      // thousands of small files). sortBy columns additionally sort
-      // rows WITHIN each task, so every block's zone maps cover a
-      // disjoint range and range scans prune to O(matching blocks).
-      // Advisory, not strict — if the bucket function can't be
-      // resolved Spark writes unclustered and the per-row routing
-      // still produces correct (more numerous) single-bucket files.
-      new Write with RequiresDistributionAndOrdering {
-        import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-        override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-          bucket match {
-            case Some((col, n)) =>
-              org.apache.spark.sql.connector.distributions.Distributions.clustered(
-                Array(Expressions.bucket(n, col)))
-            case None =>
-              org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-          }
-        override def distributionStrictlyRequired(): Boolean = false
-        override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          sortBy.map(c =>
-            Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
-        override def toBatch: BatchWrite =
-          new NativeBatchWrite(schema, path, truncateFirst, maxRowsPerFile, dictEncode,
-            compression, bucket, insertDedup, dedupToken, typeOverrides)
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          // validated but not implemented for streaming epochs — fail
-          // loudly rather than silently appending duplicate batches
-          // the user asked to have deduplicated
-          if (insertDedup) throw new UnsupportedOperationException(
-            "clickhouse_native: insertDedup is not supported for streaming writes " +
-              "(exactly-once replay protection comes from the epoch-scoped sink itself)")
-          new NativeStreamingWrite(schema, path, maxRowsPerFile, dictEncode, compression, bucket, typeOverrides)
-        }
+      override def distributionStrictlyRequired(): Boolean = false
+      override def requiredOrdering(): Array[SortOrder] =
+        o.sortBy.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
+      override def toBatch: BatchWrite = new NativeBatchWrite(o, truncateFirst)
+      override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+        // validated but not implemented for streaming epochs — fail
+        // loudly rather than silently appending duplicate batches
+        // the user asked to have deduplicated
+        if (o.insertDedup) throw new UnsupportedOperationException(
+          "clickhouse_native: insertDedup is not supported for streaming writes " +
+            "(exactly-once replay protection comes from the epoch-scoped sink itself)")
+        new NativeStreamingWrite(o)
       }
+    }
   }
 }
 
@@ -879,21 +899,18 @@ private[native] class NativeWriteBuilder(schema: StructType, path: String, maxRo
  * our own micro-batch source) see only whole files, which is what the
  * streaming read's exactly-once file log relies on.
  */
-private[native] class NativeStreamingWrite(schema: StructType, path: String,
-    maxRowsPerFile: Int, dictEncode: Boolean, compression: String = "none",
-    bucket: Option[(String, Int)] = None,
-    typeOverrides: Map[String, String] = Map.empty)
+private[native] class NativeStreamingWrite(o: NativeWriteOptions)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
   private val conf = new SerializableHadoopConf(NativeIO.sessionHadoopConf())
 
+  // Epochs carry no dedup token: replay protection comes from the
+  // epoch-scoped reconcile in commit.
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    fs.mkdirs(dir)
-    NativeStreamingWriterFactory(schema, path, maxRowsPerFile, dictEncode, conf, compression,
-      bucket, java.util.UUID.randomUUID().toString.substring(0, 8), typeOverrides)
+    val dir = new Path(o.path)
+    dir.getFileSystem(conf.value).mkdirs(dir)
+    NativeWriterFactory(o.copy(dedupToken = ""), conf, NativeIndex.freshToken())
   }
 
   // Epoch commit is recorded by the streaming engine's own offset/commit
@@ -901,64 +918,32 @@ private[native] class NativeStreamingWrite(schema: StructType, path: String,
   // linger is an earlier ATTEMPT of this same epoch: a driver that died
   // after task commits but before the engine logged the epoch replays it
   // with a fresh write token, so the first attempt's parts would
-  // double-count. Reconcile here — the committing attempt keeps exactly
-  // the files its tasks reported and removes any other file carrying
-  // this epoch's prefix (plus its sidecar).
+  // double-count — and so would a part of a task attempt whose executor
+  // died before its abort ran. The committing attempt keeps exactly the
+  // parts its tasks reported; every other part carrying this epoch's
+  // prefix goes, with its sidecar.
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val kept = messages.flatMap {
-      case NativeCommitMessage(files) => files.map(f => new Path(f).getName)
-      case _ => Seq.empty
-    }.toSet
-    val epochPrefix = f"epoch-$epochId%08d-"
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    if (fs.exists(dir)) {
-      fs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        val dataName = if (n.startsWith(".") && n.endsWith(".chidx"))
-          n.stripPrefix(".").stripSuffix(".chidx") else n
-        if (dataName.startsWith(epochPrefix) && !kept.contains(dataName))
-          fs.delete(st.getPath, true)
-      }
-    }
+    val dir = new Path(o.path)
+    val prefix = NativeIndex.epochPrefix(epochId)
+    NativeIndex.reconcile(dir.getFileSystem(conf.value), dir, _.startsWith(prefix),
+      NativeCommitMessage.parts(messages), dropOthers = false)
   }
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-/** Ships to executors — a named case class so only serializable fields travel. */
-private[native] case class NativeStreamingWriterFactory(schema: StructType, path: String,
-    maxRowsPerFile: Int, dictEncode: Boolean, conf: SerializableHadoopConf,
-    compression: String = "none", bucket: Option[(String, Int)] = None,
-    writeToken: String = "w0", typeOverrides: Map[String, String] = Map.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] = {
-    val prefix = f"epoch-$epochId%08d-"
-    bucket match {
-      case Some((col, n)) =>
-        new BucketedNativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile,
-          conf.value, col, n, prefix, dictEncode, compression, writeToken,
-          typeOverrides = typeOverrides)
-      case None =>
-        new NativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile, conf.value,
-          filePrefix = prefix, dictEncode = dictEncode, compression = compression,
-          writeToken = writeToken, typeOverrides = typeOverrides)
-    }
-  }
-}
-
-private[native] class NativeBatchWrite(schema: StructType, path: String, truncateFirst: Boolean,
-    maxRowsPerFile: Int, dictEncode: Boolean, compression: String = "none",
-    bucket: Option[(String, Int)] = None, insertDedup: Boolean = false,
-    dedupToken: String = "",
-    typeOverrides: Map[String, String] = Map.empty) extends BatchWrite {
+private[native] class NativeBatchWrite(o: NativeWriteOptions, truncateFirst: Boolean)
+    extends BatchWrite {
   // Unique token embedded in every part name this write produces. Two
   // jobs must never collide on names: partitionId AND taskId both
   // restart from 0 in a fresh session, so the deterministic
   // part-<pid>-<tid>-<seq> scheme could silently CLOBBER an existing
   // part on append (fs.create(overwrite=true)). The token also lets an
   // overwrite distinguish its own output from pre-existing data.
-  private val writeToken = java.util.UUID.randomUUID().toString.substring(0, 8)
+  private val writeToken = NativeIndex.freshToken()
   private val conf = new SerializableHadoopConf(NativeIO.sessionHadoopConf())
+  private val dir = new Path(o.path)
+  private def fs = dir.getFileSystem(conf.value)
+  private def mine(part: String): Boolean = NativeIndex.hasToken(part, writeToken)
 
   // Parts visible BEFORE this job's tasks run — the only parts
   // insert-dedup may compare against. Without the snapshot, two
@@ -973,12 +958,10 @@ private[native] class NativeBatchWrite(schema: StructType, path: String, truncat
   @volatile private var preexistingSnapshot: Set[String] = Set.empty
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
     fs.mkdirs(dir)
-    if (insertDedup && !truncateFirst)
+    if (o.insertDedup && !truncateFirst)
       preexistingSnapshot = fs.listStatus(dir).iterator.map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSet
+        .filter(n => NativeIndex.partOf(n).contains(n)).toSet
     // NOTE: an overwrite does NOT clear the target here. Deleting
     // before the tasks run destroys the old data while a self-read
     // (INSERT OVERWRITE t SELECT ... FROM t — the natural compaction
@@ -986,33 +969,19 @@ private[native] class NativeBatchWrite(schema: StructType, path: String, truncat
     // gone. The old files are removed at commit() instead, so readers
     // of this very write's input stay consistent and an aborted
     // overwrite leaves the previous data fully intact.
-    new NativeWriterFactory(schema, path, maxRowsPerFile, dictEncode, conf, compression,
-      bucket, writeToken, dedupToken, typeOverrides)
+    NativeWriterFactory(o, conf, writeToken)
   }
 
   // Spark's default useCommitCoordinator() (true) guarantees at most one
-  // committed attempt per partition; aborted attempts delete their file
-  // (NativeDataWriter.abort), so speculative/retried tasks leave no
-  // duplicate or truncated parts behind.
+  // committed attempt per partition, and an aborted attempt deletes its
+  // own parts (NativeDataWriter.abort). A part of an attempt whose
+  // executor died before abort could run is caught here: the job keeps
+  // exactly the parts its tasks reported (one listing of the table
+  // directory). An overwrite additionally drops every part not of this
+  // write — the pre-existing data — together with its sidecar.
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    if (truncateFirst) {
-      // overwrite, second half: every data entry NOT carrying this
-      // write's token is pre-existing data — remove it AND its hidden
-      // ".<part>.chidx" sidecar (which also lacks the token in its
-      // derived name). "_" control files and unrelated dot-files
-      // survive, as before.
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf.value)
-      if (fs.exists(dir)) {
-        val tokenTag = s"-$writeToken-"
-        fs.listStatus(dir).foreach { st =>
-          val n = st.getPath.getName
-          val isStaleData = !n.startsWith("_") && !n.startsWith(".") && !n.contains(tokenTag)
-          val isStaleSidecar = n.startsWith(".") && n.endsWith(".chidx") && !n.contains(tokenTag)
-          if (isStaleData || isStaleSidecar) fs.delete(st.getPath, true)
-        }
-      }
-    }
+    val remaining = NativeIndex.reconcile(fs, dir, mine,
+      NativeCommitMessage.parts(messages), dropOthers = truncateFirst)
     // insert_deduplicate (the ClickHouse replicated-MergeTree INSERT
     // contract, at PART granularity): a committed part whose content
     // equals a PRE-EXISTING part's is a re-inserted block — drop it,
@@ -1036,58 +1005,46 @@ private[native] class NativeBatchWrite(schema: StructType, path: String, truncat
     // write's parts against each other. Never under overwrite: the
     // stale parts above are already gone or doomed, and deduping a
     // new part against a part this commit deletes would lose data.
-    if (insertDedup && !truncateFirst) {
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf.value)
-      if (fs.exists(dir)) {
-        val tokenTag = s"-$writeToken-"
-        // header-bounded 3-line sidecar read — the pass stays
-        // O(parts) driver work, never O(total blocks). Identity =
-        // (contentHash, dedupToken): parts written under different
-        // tokens NEVER dedup against each other (distinct epochs/jobs
-        // with legitimately identical content both land); absent
-        // token = "" preserves the pure-content identity.
-        def identityOf(p: Path): Option[(String, String)] = {
-          val m = NativeIndex.readMeta(fs, p)
-          m.get("contentHash").map(h => (h, m.getOrElse("dedupToken", "")))
-        }
-        def sameBytes(a: Path, b: Path): Boolean = {
-          val ia = new java.io.BufferedInputStream(fs.open(a), 1 << 16)
-          try {
-            val ib = new java.io.BufferedInputStream(fs.open(b), 1 << 16)
-            try {
-              var x = 0; var y = 0
-              do { x = ia.read(); y = ib.read() } while (x == y && x != -1)
-              x == y
-            } finally ib.close()
-          } finally ia.close()
-        }
-        val dataParts = fs.listStatus(dir).filter { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-        val mine = dataParts.filter(_.getPath.getName.contains(tokenTag))
-        // ONLY parts from the start-of-job snapshot count as
-        // pre-existing (see preexistingSnapshot); a part without a
-        // hash (foreign writer / old sidecar) simply can't match —
-        // dedup degrades to append. One representative per hash: if
-        // two OLD parts ever collided on a hash, a new part is only
-        // compared against one of them — a miss degrades to append,
-        // never to data loss.
-        val existing = dataParts.iterator
-          .filter(st => preexistingSnapshot.contains(st.getPath.getName))
-          .flatMap(st => identityOf(st.getPath).map(_ -> st)).toMap
-        if (existing.nonEmpty) mine.foreach { st =>
-          val prior = identityOf(st.getPath).flatMap(existing.get)
-          val isDup = prior.exists(p => p.getLen == st.getLen &&
-            sameBytes(st.getPath, p.getPath))
-          if (isDup) {
-            fs.delete(st.getPath, false)
-            val idx = NativeIndex.sidecarPath(st.getPath)
-            if (fs.exists(idx)) fs.delete(idx, false)
-          }
-        }
-      }
+    if (o.insertDedup && !truncateFirst) dropReinserted(remaining)
+  }
+
+  private def dropReinserted(dataParts: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
+    val fs = this.fs
+    // header-bounded 3-line sidecar read — the pass stays
+    // O(parts) driver work, never O(total blocks). Identity =
+    // (contentHash, dedupToken): parts written under different
+    // tokens NEVER dedup against each other (distinct epochs/jobs
+    // with legitimately identical content both land); absent
+    // token = "" preserves the pure-content identity.
+    def identityOf(p: Path): Option[(String, String)] = {
+      val m = NativeIndex.readMeta(fs, p)
+      m.get("contentHash").map(h => (h, m.getOrElse("dedupToken", "")))
+    }
+    def sameBytes(a: Path, b: Path): Boolean = {
+      val ia = new java.io.BufferedInputStream(fs.open(a), 1 << 16)
+      try {
+        val ib = new java.io.BufferedInputStream(fs.open(b), 1 << 16)
+        try {
+          var x = 0; var y = 0
+          do { x = ia.read(); y = ib.read() } while (x == y && x != -1)
+          x == y
+        } finally ib.close()
+      } finally ia.close()
+    }
+    // ONLY parts from the start-of-job snapshot count as
+    // pre-existing (see preexistingSnapshot); a part without a
+    // hash (foreign writer / old sidecar) simply can't match —
+    // dedup degrades to append. One representative per hash: if
+    // two OLD parts ever collided on a hash, a new part is only
+    // compared against one of them — a miss degrades to append,
+    // never to data loss.
+    val existing = dataParts.iterator
+      .filter(st => preexistingSnapshot.contains(st.getPath.getName))
+      .flatMap(st => identityOf(st.getPath).map(_ -> st)).toMap
+    if (existing.nonEmpty) dataParts.filter(st => mine(st.getPath.getName)).foreach { st =>
+      val prior = identityOf(st.getPath).flatMap(existing.get)
+      if (prior.exists(p => p.getLen == st.getLen && sameBytes(st.getPath, p.getPath)))
+        NativeIndex.deletePart(fs, st.getPath)
     }
   }
 
@@ -1095,36 +1052,30 @@ private[native] class NativeBatchWrite(schema: StructType, path: String, truncat
   // task-level abort path, so their token-tagged parts would linger —
   // as partial data after a failed append, or as DUPLICATES after a
   // failed overwrite (the old files were deliberately kept). Remove
-  // everything carrying this write's token; old data is untouched.
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    if (fs.exists(dir)) {
-      val tokenTag = s"-$writeToken-"
-      fs.listStatus(dir).foreach { st =>
-        if (st.getPath.getName.contains(tokenTag)) fs.delete(st.getPath, true)
-      }
-    }
-  }
+  // every part of this write; old data is untouched.
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    NativeIndex.reconcile(fs, dir, mine, Set.empty, dropOthers = false)
 }
 
-private[native] class NativeWriterFactory(schema: StructType, path: String,
-    maxRowsPerFile: Int, dictEncode: Boolean, conf: SerializableHadoopConf,
-    compression: String = "none", bucket: Option[(String, Int)] = None,
-    writeToken: String = "w0", dedupToken: String = "",
-    typeOverrides: Map[String, String] = Map.empty)
-    extends DataWriterFactory {
+/**
+ * The one task-writer factory, batch and streaming; ships to
+ * executors (a case class, so only serializable fields travel). Batch
+ * parts carry no name prefix; a streaming epoch's parts carry
+ * `epoch-<n>-`, which its commit reconciles by.
+ */
+private[native] case class NativeWriterFactory(o: NativeWriteOptions,
+    conf: SerializableHadoopConf, writeToken: String)
+    extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    bucket match {
-      case Some((col, n)) =>
-        new BucketedNativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile,
-          conf.value, col, n, "", dictEncode, compression, writeToken, dedupToken,
-          typeOverrides)
-      case None =>
-        new NativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile, conf.value,
-          dictEncode = dictEncode, compression = compression, writeToken = writeToken,
-          dedupToken = dedupToken, typeOverrides = typeOverrides)
-    }
+    writer(partitionId, taskId, "")
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, NativeIndex.epochPrefix(epochId))
+  private def writer(partitionId: Int, taskId: Long, prefix: String): DataWriter[InternalRow] =
+    if (o.bucket.isDefined)
+      new BucketedNativeDataWriter(o, partitionId, taskId, conf.value, prefix, writeToken)
+    else new NativeDataWriter(o, partitionId, taskId, conf.value, prefix, writeToken)
 }
 
 /**
@@ -1135,22 +1086,19 @@ private[native] class NativeWriterFactory(schema: StructType, path: String,
  * bucket it actually sees. Commit/abort fan out to every child so the
  * at-most-one-committed-attempt contract is unchanged.
  */
-private[native] class BucketedNativeDataWriter(schema: StructType, dir: String,
-    partitionId: Int, taskId: Long, rowsPerFile: Int, conf: Configuration,
-    bucketCol: String, numBuckets: Int, filePrefix: String,
-    dictEncode: Boolean, compression: String, writeToken: String = "w0",
-    dedupToken: String = "", typeOverrides: Map[String, String] = Map.empty)
+private[native] class BucketedNativeDataWriter(o: NativeWriteOptions, partitionId: Int,
+    taskId: Long, conf: Configuration, filePrefix: String, writeToken: String)
     extends DataWriter[InternalRow] {
-  private val keyIdx = schema.fieldIndex(bucketCol)
-  private val keyType = schema.fields(keyIdx).dataType
+  private val (bucketCol, numBuckets) = o.bucket.get
+  private val keyIdx = o.schema.fieldIndex(bucketCol)
+  private val keyType = o.schema.fields(keyIdx).dataType
   private val writers = new Array[NativeDataWriter](numBuckets)
 
   private def writerFor(b: Int): NativeDataWriter = {
     var w = writers(b)
     if (w == null) {
-      w = new NativeDataWriter(schema, dir, partitionId, taskId, rowsPerFile, conf,
-        filePrefix + NativeBucket.filePrefix(b), dictEncode, compression, writeToken,
-        dedupToken, typeOverrides)
+      w = new NativeDataWriter(o, partitionId, taskId, conf,
+        filePrefix + NativeBucket.filePrefix(b), writeToken)
       writers(b) = w
     }
     w
@@ -1166,21 +1114,35 @@ private[native] class BucketedNativeDataWriter(schema: StructType, dir: String,
     NativeCommitMessage(files)
   }
 
-  override def abort(): Unit = writers.iterator.filter(_ != null).foreach(_.abort())
+  /** Aborts every child even when one throws; the first failure is
+    * rethrown with the others suppressed. */
+  override def abort(): Unit = {
+    var failure: Throwable = null
+    writers.iterator.filter(_ != null).foreach { w =>
+      try w.abort()
+      catch {
+        case t: Throwable =>
+          if (failure == null) failure = t else failure.addSuppressed(t)
+      }
+    }
+    if (failure != null) throw failure
+  }
   override def close(): Unit = writers.iterator.filter(_ != null).foreach(_.close())
 }
 
 /**
- * Task-side writer: buffers rows and emits 64k-row Native blocks.
+ * Task-side writer: buffers rows and emits 64k-row Native blocks into
+ * part files named by [[NativeIndex.partName]] (`filePrefix`, the
+ * task, and the job's `writeToken`), each with its sidecar. Commit
+ * reports the parts; abort deletes them.
  * (The reference has no write path at all; fixtures required a real
  * ClickHouse — README.md:43-47.)
  */
-private[native] class NativeDataWriter(schema: StructType, dir: String,
-    partitionId: Int, taskId: Long, rowsPerFile: Int, conf: Configuration,
-    filePrefix: String = "", dictEncode: Boolean = true, compression: String = "none",
-    writeToken: String = "w0", dedupToken: String = "",
-    typeOverrides: Map[String, String] = Map.empty)
+private[native] class NativeDataWriter(o: NativeWriteOptions, partitionId: Int,
+    taskId: Long, conf: Configuration, filePrefix: String = "", writeToken: String = "w0")
     extends DataWriter[InternalRow] {
+  import o.{compression, dedupToken, schema, typeOverrides}
+  private val rowsPerFile = o.maxRowsPerFile
 
   private val rowsPerBlock = 65536
   // The format has no intra-file split points, so one giant part file
@@ -1207,7 +1169,7 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
   // distinct value (the parquet-dictionary advantage BENCH_NOTES
   // measured this format lacking).
   private var effectiveTypes: Array[ChType] = chTypes
-  private var typesDecided = !dictEncode
+  private var typesDecided = !o.dictEncode
 
   private def decideDictTypes(): Unit = {
     effectiveTypes = chTypes.zipWithIndex.map { case (t, i) =>
@@ -1358,8 +1320,8 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
     closeCurrentFile()
     fileSeq += 1
     rowsInFile = 0
-    val p = new Path(
-      f"$dir/${filePrefix}part-$partitionId%05d-$taskId-$writeToken-$fileSeq%03d.clickhouse")
+    val p = new Path(new Path(o.path),
+      NativeIndex.partName(filePrefix, partitionId, taskId, writeToken, fileSeq))
     written += p
     currentFile = p
     hasher = new HashingOutputStream(p.getFileSystem(conf).create(p, true))
@@ -1416,22 +1378,27 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
     NativeCommitMessage(written.map(_.toString).toSeq)
   }
 
-  override def abort(): Unit = {
-    // Failed/speculative attempt: remove ALL part files this attempt
-    // produced (and their index sidecars) so a retry (different taskId
-    // → different names) can't leave truncated or duplicate data behind.
-    if (writer != null) writer.close()
-    written.foreach { p =>
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, false)
-      val idx = NativeIndex.sidecarPath(p)
-      if (fs.exists(idx)) fs.delete(idx, false)
-    }
-  }
+  // Failed/speculative attempt: remove ALL part files this attempt
+  // produced (and their index sidecars) so a retry (different taskId
+  // → different names) can't leave truncated or duplicate data behind.
+  // The delete runs even when closing fails — the close usually
+  // re-raises the very IOException that failed the task.
+  override def abort(): Unit =
+    try if (writer != null) writer.close()
+    finally written.foreach(p => NativeIndex.deletePart(p.getFileSystem(conf), p))
   override def close(): Unit = ()
 }
 
 private[native] case class NativeCommitMessage(files: Seq[String]) extends WriterCommitMessage
+
+private[native] object NativeCommitMessage {
+  /** Names of the parts the tasks behind `messages` reported. */
+  def parts(messages: Array[WriterCommitMessage]): Set[String] =
+    messages.iterator.flatMap {
+      case NativeCommitMessage(files) => files.map(f => new Path(f).getName)
+      case _ => Nil
+    }.toSet
+}
 
 /** FNV-1a-64 over every byte written — the part content hash the
   * sidecar records for insert-dedup (and any external integrity use).

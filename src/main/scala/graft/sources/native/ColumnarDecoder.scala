@@ -497,13 +497,7 @@ private[sources] final class BatchPartitionReader(required: StructType, limit: I
     false
   }
 
-  private def named[T](body: => T): T =
-    try body
-    catch {
-      case e: IOException if file.isDefined =>
-        throw new IOException(
-          s"clickhouse_native: corrupt or truncated file ${file.get}: ${e.getMessage}", e)
-    }
+  private def named[T](body: => T): T = file.fold(body)(NativeIO.namingFile(_)(body))
 
   private def finish(): Unit = if (!finished) { finished = true; source.close() }
 

@@ -216,9 +216,10 @@ final class NativeBlockWriter(stream: OutputStream, compression: String = "none"
     }
   }
 
-  override def close(): Unit = {
-    out.flush()
-    if (frames != null) frames.endFrame()
-    stream.close()
-  }
+  /** Flushes, then closes the stream even when the flush fails. */
+  override def close(): Unit =
+    try {
+      out.flush()
+      if (frames != null) frames.endFrame()
+    } finally stream.close()
 }

@@ -3,7 +3,7 @@ package graft.sources.native
 import java.io.{FileNotFoundException, OutputStream}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 
 /**
  * Optional block-offset sidecar for Native data files, enabling
@@ -66,8 +66,87 @@ private[native] object NativeIndex {
   final case class BlockEntry(offset: Long, rows: Long,
       stats: Map[String, ColStat] = Map.empty)
 
+  // ------------------------------------------------------------------
+  // Part-file layout: the one place that knows how parts and sidecars
+  // are named, and so the one place that copies, deletes and
+  // reconciles them. A part is `<prefix>part-<pid>-<tid>-<token>-<seq>
+  // .clickhouse` (prefix = `epoch-<n>-` for streaming, then
+  // `b<bucket>-` when bucketed); its sidecar is `.<part>.chidx`.
+  // ------------------------------------------------------------------
+
+  private val SidecarSuffix = ".chidx"
+
   def sidecarPath(dataFile: Path): Path =
-    new Path(dataFile.getParent, s".${dataFile.getName}.chidx")
+    new Path(dataFile.getParent, s".${dataFile.getName}$SidecarSuffix")
+
+  /** Name of one part file a task writes. `token` is unique per write
+    * job, so two jobs never collide on a name. */
+  def partName(prefix: String, partitionId: Int, taskId: Long, token: String,
+      seq: Int): String =
+    f"${prefix}part-$partitionId%05d-$taskId-$token-$seq%03d.clickhouse"
+
+  /** A new write token: 8 hex characters. */
+  def freshToken(): String = java.util.UUID.randomUUID().toString.substring(0, 8)
+
+  /** Name prefix of every part a streaming epoch writes. */
+  def epochPrefix(epochId: Long): String = f"epoch-$epochId%08d-"
+
+  /** True when part `name` was written under write token `token`. */
+  def hasToken(name: String, token: String): Boolean = name.contains(s"-$token-")
+
+  /**
+   * The part a directory-listing entry belongs to: a data file is its
+   * own part, a sidecar belongs to the data file it indexes. None for
+   * `_` control files and other dot-files, which no reconcile touches.
+   */
+  def partOf(name: String): Option[String] =
+    if (name.startsWith(".")) {
+      if (name.endsWith(SidecarSuffix) && name.length > 1 + SidecarSuffix.length)
+        Some(name.substring(1, name.length - SidecarSuffix.length))
+      else None
+    } else if (name.startsWith("_")) None
+    else Some(name)
+
+  /** Delete a part together with its sidecar (either may be absent). */
+  def deletePart(fs: FileSystem, dataFile: Path): Unit = {
+    fs.delete(dataFile, false)
+    fs.delete(sidecarPath(dataFile), false)
+  }
+
+  /** Copy a part and, when it has one, its sidecar into `dstDir`. */
+  def copyPart(fs: FileSystem, dataFile: Path, dstFs: FileSystem, dstDir: Path,
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    FileUtil.copy(fs, dataFile, dstFs, new Path(dstDir, dataFile.getName), false, conf)
+    val sidecar = sidecarPath(dataFile)
+    if (fs.exists(sidecar))
+      FileUtil.copy(fs, sidecar, dstFs, new Path(dstDir, sidecar.getName), false, conf)
+  }
+
+  /**
+   * Job-level reconcile of a write over ONE listing of `dir`: a job
+   * keeps exactly the parts its tasks reported. Deleted, each with its
+   * sidecar:
+   *  - parts of this write (`mine`) that are not in `kept` — left by a
+   *    task attempt that died before its own abort ran, or, with
+   *    `kept` empty (job abort), every part of this write;
+   *  - with `dropOthers` (overwrite), every part not of this write.
+   * Returns the data files that remain, for the insert-dedup pass.
+   */
+  def reconcile(fs: FileSystem, dir: Path, mine: String => Boolean, kept: Set[String],
+      dropOthers: Boolean): Seq[FileStatus] = {
+    val listing = try fs.listStatus(dir).toSeq
+      catch { case _: FileNotFoundException => Seq.empty }
+    listing.filter { st =>
+      val n = st.getPath.getName
+      partOf(n) match {
+        case Some(part) =>
+          val doomed = if (mine(part)) !kept(part) else dropOthers
+          if (doomed) fs.delete(st.getPath, true)
+          !doomed && part == n
+        case None => false
+      }
+    }
+  }
 
   private[native] def enc(s: String): String =
     java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
@@ -125,8 +204,6 @@ private[native] object NativeIndex {
   def read(fs: FileSystem, dataFile: Path, dataLen: Long): Option[Array[BlockEntry]] =
     readWithMeta(fs, dataFile, dataLen).map(_._1)
 
-  /** [[read]] plus the writer-authored `#meta` key/value line (empty for
-    * pre-meta sidecars and CHIDX1). */
   /** The `#meta` line alone — a bounded 3-line read, no block-entry
     * parse: the per-part identity probe insert-dedup runs at commit
     * stays O(parts), not O(total blocks). Parts and their sidecars
@@ -144,16 +221,25 @@ private[native] object NativeIndex {
         val l1 = in.readLine()
         if (l1 == null || !l1.startsWith("#cols ")) return Map.empty
         val l2 = in.readLine()
-        if (l2 == null || !l2.startsWith("#meta ")) Map.empty
-        else l2.stripPrefix("#meta ").trim.split(',').filter(_.contains('='))
-          .map { kv =>
-            val i = kv.indexOf('=')
-            dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
-          }.toMap
+        if (l2 == null || !l2.startsWith("#meta ")) Map.empty else parseMeta(l2)
       } finally in.close()
     } catch { case _: java.io.IOException => Map.empty }
   }
 
+  private def parseMeta(line: String): Map[String, String] =
+    line.stripPrefix("#meta ").trim.split(',').filter(_.contains('=')).map { kv =>
+      val i = kv.indexOf('=')
+      dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
+    }.toMap
+
+  /** The writer-declared compression of a data file of `dataLen`
+    * bytes, from its validated sidecar; None when absent or unreadable. */
+  def declaredCompression(fs: FileSystem, dataFile: Path, dataLen: Long): Option[String] =
+    try readWithMeta(fs, dataFile, dataLen).flatMap(_._2.get("compression"))
+    catch { case _: java.io.IOException => None }
+
+  /** [[read]] plus the writer-authored `#meta` key/value line (empty for
+    * pre-meta sidecars and CHIDX1). */
   def readWithMeta(fs: FileSystem, dataFile: Path,
       dataLen: Long): Option[(Array[BlockEntry], Map[String, String])] = {
     val p = sidecarPath(dataFile)
@@ -185,13 +271,7 @@ private[native] object NativeIndex {
       }
     // optional writer-meta line (absent in pre-meta CHIDX2 sidecars)
     val hasMeta = v2 && lines.length > 2 && lines(2).startsWith("#meta ")
-    val meta: Map[String, String] =
-      if (!hasMeta) Map.empty
-      else lines(2).stripPrefix("#meta ").trim.split(',').filter(_.contains('='))
-        .map { kv =>
-          val i = kv.indexOf('=')
-          dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
-        }.toMap
+    val meta = if (hasMeta) parseMeta(lines(2)) else Map.empty[String, String]
     val firstBlockLine = (if (v2) 2 else 1) + (if (hasMeta) 1 else 0)
     if (len != dataLen || count != lines.length - firstBlockLine || count == 0) return None
     val entries = new Array[BlockEntry](count)

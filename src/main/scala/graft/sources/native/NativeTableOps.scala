@@ -1,6 +1,6 @@
 package graft.sources.native
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,12 +74,7 @@ object NativeTableOps {
             entries.length, meta.getOrElse("compression", "none"),
             indexed = true)
         case None =>
-          var rows = 0L
-          var blocks = 0
-          val rd = new NativeBlockReader(
-            NativeCompression.maybeWrapRead(fs.open(p), conf), Some(Set.empty))
-          try while (rd.hasNext) { rows += rd.next().numRows; blocks += 1 }
-          finally rd.close()
+          val (rows, blocks) = NativeIO.walkRowCount(p, conf)
           PartMeta(p.getName, st.getLen, rows, blocks, "none", indexed = false)
       }
     }
@@ -102,17 +97,9 @@ object NativeTableOps {
   def columnsMeta(spark: SparkSession, dir: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val metas = NativeIO.resolveFileStatuses(Seq(dir), conf).flatMap { st =>
-      val p = st.getPath
-      val fs = p.getFileSystem(conf)
-      val declared =
-        try NativeIndex.readWithMeta(fs, p, st.getLen)
-          .flatMap(_._2.get("compression"))
-        catch { case _: java.io.IOException => None }
-      val in = NativeCompression.maybeWrapRead(fs.open(p), conf, declared)
-      try NativeBlockReader.readHeader(in).zipWithIndex.map {
-        case ((name, t), i) =>
-          ColumnMeta(p.getName, i, name, t.name, t.sparkType.simpleString)
-      } finally in.close()
+      NativeIO.header(st, conf).zipWithIndex.map { case ((name, t), i) =>
+        ColumnMeta(st.getPath.getName, i, name, t.name, t.sparkType.simpleString)
+      }
     }
     spark.createDataFrame(metas)
   }
@@ -144,11 +131,7 @@ object NativeTableOps {
   def applyTtl(spark: SparkSession, srcDir: String, dstDir: String,
       tsCol: String, cutoff: Column): TtlResult = {
     val conf = spark.sessionState.newHadoopConf()
-    val dst = new Path(dstDir)
-    val dstFs = dst.getFileSystem(conf)
-    require(!dstFs.exists(dst) || dstFs.listStatus(dst).isEmpty,
-      s"TTL target $dstDir must be empty — TTL writes beside the live table")
-    dstFs.mkdirs(dst)
+    val (dst, dstFs) = emptyTarget(conf, dstDir, "TTL")
 
     val src = spark.read.format("clickhouse_native").option("mergeSchema", "true").load(srcDir)
     require(src.columns.contains(tsCol), s"TTL column '$tsCol' not in table")
@@ -158,7 +141,7 @@ object NativeTableOps {
 
     val dropped = Seq.newBuilder[String]
     val copied = Seq.newBuilder[String]
-    val rewrite = Seq.newBuilder[Path]
+    val rewrite = Seq.newBuilder[FileStatus]
 
     NativeIO.resolveFileStatuses(Seq(srcDir), conf).foreach { st =>
       val p = st.getPath
@@ -167,40 +150,28 @@ object NativeTableOps {
       def noBlockMatches(filters: Seq[org.apache.spark.sql.sources.Filter]) =
         filters.nonEmpty && entries.exists(es =>
           !es.exists(e => NativeIndex.blockMayMatch(e.stats, filters)))
-      lazy val tsNonNullable = {
-        val declared =
-          try NativeIndex.readWithMeta(fs, p, st.getLen)
-            .flatMap(_._2.get("compression"))
-          catch { case _: java.io.IOException => None }
-        val in = NativeCompression.maybeWrapRead(fs.open(p), conf, declared)
-        try NativeBlockReader.readHeader(in)
-          .exists { case (n, t) => n == tsCol && !ChType.isNullable(t) }
-        finally in.close()
-      }
+      lazy val tsNonNullable = NativeIO.header(st, conf)
+        .exists { case (n, t) => n == tsCol && !ChType.isNullable(t) }
       if (noBlockMatches(liveFilters) && tsNonNullable) {
         dropped += p.getName // provably all-expired: metadata-only drop
       } else if (noBlockMatches(expiredFilters)) {
-        FileUtil.copy(fs, p, dstFs, new Path(dst, p.getName), false, conf)
-        val sidecar = NativeIndex.sidecarPath(p)
-        if (fs.exists(sidecar))
-          FileUtil.copy(fs, sidecar, dstFs, new Path(dst, sidecar.getName),
-            false, conf)
+        NativeIndex.copyPart(fs, p, dstFs, dst, conf)
         copied += p.getName
-      } else rewrite += p
+      } else rewrite += st
     }
 
-    val rewritePaths = rewrite.result()
-    if (rewritePaths.nonEmpty) {
+    val rewriteParts = rewrite.result()
+    if (rewriteParts.nonEmpty) {
       val w = spark.read.format("clickhouse_native").option("mergeSchema", "true")
-        .load(rewritePaths.map(_.toString): _*)
+        .load(rewriteParts.map(_.getPath.toString): _*)
         .filter(!coalesce(expiredPred, lit(false)))
         .write.format("clickhouse_native")
-      declaredCodec(spark, rewritePaths)
+      declaredCodec(spark, rewriteParts)
         .fold(w)(c => w.option("compression", c))
         .mode("append").save(dstDir)
     }
     TtlResult(dropped.result(), copied.result(),
-      rewritePaths.map(_.getName))
+      rewriteParts.map(_.getPath.getName))
   }
 
   /** Per-part outcome of [[applyTtlRecompress]]. */
@@ -221,11 +192,7 @@ object NativeTableOps {
   def applyTtlRecompress(spark: SparkSession, srcDir: String, dstDir: String,
       tsCol: String, cutoff: Column, codec: String = "zstd"): RecompressResult = {
     val conf = spark.sessionState.newHadoopConf()
-    val dst = new Path(dstDir)
-    val dstFs = dst.getFileSystem(conf)
-    require(!dstFs.exists(dst) || dstFs.listStatus(dst).isEmpty,
-      s"recompress target $dstDir must be empty — TTL writes beside the live table")
-    dstFs.mkdirs(dst)
+    val (dst, dstFs) = emptyTarget(conf, dstDir, "recompress")
 
     val src = spark.read.format("clickhouse_native").option("mergeSchema", "true").load(srcDir)
     require(src.columns.contains(tsCol), s"TTL column '$tsCol' not in table")
@@ -241,11 +208,7 @@ object NativeTableOps {
         !es.exists(e => NativeIndex.blockMayMatch(e.stats, liveFilters)))
       if (provablyCold) cold += p
       else {
-        FileUtil.copy(fs, p, dstFs, new Path(dst, p.getName), false, conf)
-        val sidecar = NativeIndex.sidecarPath(p)
-        if (fs.exists(sidecar))
-          FileUtil.copy(fs, sidecar, dstFs, new Path(dst, sidecar.getName),
-            false, conf)
+        NativeIndex.copyPart(fs, p, dstFs, dst, conf)
         copied += p.getName
       }
     }
@@ -350,12 +313,7 @@ object NativeTableOps {
   private def mutate(spark: SparkSession, srcDir: String, dstDir: String,
       pred: Column, set: Map[String, Column], delete: Boolean): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    val dst = new Path(dstDir)
-    val dstFs = dst.getFileSystem(conf)
-    require(!dstFs.exists(dst) || dstFs.listStatus(dst).isEmpty,
-      s"mutation target $dstDir must be empty — mutations write beside " +
-        "the live table; swapping the result in is the catalog's job")
-    dstFs.mkdirs(dst)
+    val (dst, dstFs) = emptyTarget(conf, dstDir, "mutation")
 
     val src = spark.read.format("clickhouse_native").option("mergeSchema", "true").load(srcDir)
     set.keys.foreach(c => require(src.columns.contains(c),
@@ -364,13 +322,7 @@ object NativeTableOps {
     val (affected, untouched) = classifyParts(spark, srcDir, src, pred)
 
     untouched.foreach { st =>
-      val fs = st.getPath.getFileSystem(conf)
-      FileUtil.copy(fs, st.getPath, dstFs, new Path(dst, st.getPath.getName),
-        false, conf)
-      val sidecar = NativeIndex.sidecarPath(st.getPath)
-      if (fs.exists(sidecar))
-        FileUtil.copy(fs, sidecar, dstFs, new Path(dst, sidecar.getName),
-          false, conf)
+      NativeIndex.copyPart(st.getPath.getFileSystem(conf), st.getPath, dstFs, dst, conf)
     }
 
     if (affected.nonEmpty) {
@@ -393,7 +345,7 @@ object NativeTableOps {
           adf.select(scala.collection.immutable.ArraySeq.unsafeWrapArray(cols): _*)
         }
       val w = out.write.format("clickhouse_native")
-      declaredCodec(spark, affected.map(_.getPath).toSeq)
+      declaredCodec(spark, affected)
         .fold(w)(c => w.option("compression", c))
         .mode("append").save(dstDir)
     }
@@ -448,18 +400,27 @@ object NativeTableOps {
     * keep their codec byte-identically, so without this the rewritten
     * fraction would silently decay a compressed table's storage tier
     * on every maintenance cycle. */
-  private def declaredCodec(spark: SparkSession, paths: Seq[Path]): Option[String] = {
+  private def declaredCodec(spark: SparkSession, parts: Seq[FileStatus]): Option[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    val codecs = paths.map { p =>
-      val fs = p.getFileSystem(conf)
-      try NativeIndex.readWithMeta(fs, p, fs.getFileStatus(p).getLen)
-        .flatMap(_._2.get("compression")).getOrElse("none")
-      catch { case _: java.io.IOException => "none" }
-    }.distinct
-    codecs match {
+    parts.map { st =>
+      NativeIndex.declaredCompression(st.getPath.getFileSystem(conf), st.getPath, st.getLen)
+        .getOrElse("none")
+    }.distinct match {
       case Seq(c) if c != "none" => Some(c)
       case _ => None
     }
+  }
+
+  /** The empty directory a maintenance pass writes into: results land
+    * BESIDE the live table; swapping them in is the catalog's job. */
+  private def emptyTarget(conf: org.apache.hadoop.conf.Configuration, dstDir: String,
+      what: String): (Path, FileSystem) = {
+    val dst = new Path(dstDir)
+    val dstFs = dst.getFileSystem(conf)
+    require(!dstFs.exists(dst) || dstFs.listStatus(dst).isEmpty,
+      s"$what target $dstDir must be empty — $what writes land beside the live table")
+    dstFs.mkdirs(dst)
+    (dst, dstFs)
   }
 
   private def basePartNames(spark: SparkSession, baseDir: String): Seq[String] =

@@ -1405,30 +1405,23 @@ class LlmOpsSpec extends AnyFunSuite {
       val jaccGot = Dedup.ngramPairsExact(df, "doc_id", "text", theta)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(jaccGot === jaccTruth, s"ngram mismatch seed=$seed theta=$theta")
+      // brute-force containment |A∩B|/|A|, rounded to 4dp the way the
+      // production plan's round() does (HALF_UP on the double)
       val contTruth = (for {
         (ia, sa) <- sets; (ib, sb) <- sets
-        if ia != ib && sa.count(sb.contains).toDouble / sa.size >= theta
-      } yield (ia, ib)).toSet
+        if ia != ib
+        c = sa.count(sb.contains).toDouble / sa.size
+        if c >= theta
+      } yield (ia, ib, BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
       // collected ONCE with the containment value (ADVICE r13: a second
       // collect of the same expensive exact-containment plan per
-      // seed/theta iteration doubled the adversarial loop's cost); the
-      // id-pair truth check and the key-verify identity pin both derive
-      // from this single collect.
+      // seed/theta iteration doubled the adversarial loop's cost); both
+      // the id pairs and the values are checked against the truth.
       val contProd = Dedup.containmentPairsExact(df, "doc_id", "text", theta)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val contGot = contProd.map { case (a, b, _) => (a, b) }
-      assert(contGot === contTruth, s"containment mismatch seed=$seed theta=$theta")
-      // the round-13 A/B shape (inverted-index key-join verify) must
-      // stay output-IDENTICAL to the production arrays verify — it is
-      // kept callable so the recorded BENCH_NOTES measurement stays
-      // reproducible, and this pin is what makes "identical pair sets"
-      // a standing claim rather than a one-off observation. Containment
-      // values compared too (not just the id pairs): both shapes round
-      // the same exact inter/n_a to 4dp.
-      val contKeyV = Dedup.containmentPairsExactKeyVerify(
-          df, "doc_id", "text", theta)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(contKeyV === contProd, s"key-verify diverged seed=$seed theta=$theta")
+      assert(contProd.map { case (a, b, _) => (a, b) } ===
+        contTruth.map { case (a, b, _) => (a, b) }, s"containment mismatch seed=$seed theta=$theta")
+      assert(contProd === contTruth, s"containment values diverged seed=$seed theta=$theta")
     }
   }
 
@@ -1540,7 +1533,7 @@ class LlmOpsSpec extends AnyFunSuite {
     graft.SparkTestBase.withAqeDisabled {
       // minhash joined ngram's unconditional-pin camp in r14: the
       // bypass was re-measured for it specifically
-      // (tools/r14_bypass_ab.scala — bypass-on 1.67/3.11 s at 1×/10×
+      // (OPTIMIZATION_r14.md §7 — bypass-on 1.67/3.11 s at 1×/10×
       // vs pinned 1.04/2.57; the broadcast plan streams the raw scan's
       // few input splits through the verify), so its small-SF plan now
       // keeps the same shuffle shape the at-scale plan has.
@@ -1548,7 +1541,7 @@ class LlmOpsSpec extends AnyFunSuite {
         "minhash must stay pinned (no broadcast) even on a known-small corpus")
       // containment joined the unconditional-pin camp in r15: the
       // interleaved same-session conf A/B
-      // (tools/r15_contain_conf_ab.scala, ngram as the conf-invariant
+      // (OPTIMIZATION_r15.md §3, ngram as the conf-invariant
       // noise control) measured the bypass costing the 10x scale point
       // 12-19% (7.04-7.12 s vs 5.56-6.26 s pinned) for ~0.1 s at 1x —
       // the r14 minhash parallelism-collapse class; the r14 A/B that

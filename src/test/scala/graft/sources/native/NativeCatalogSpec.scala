@@ -280,6 +280,42 @@ class NativeCatalogSpec extends AnyFunSuite {
       s"sorted table point query should decode one block, read ${b.metrics("numOutputRows").value}")
   }
 
+  test("write plans: no exchange or sort when unbucketed, one local sort for sortBy, clustering when bucketed") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.wplan")
+    Seq("plain", "sorted", "bucketed").foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft.wplan.$t"))
+    spark.sql("CREATE TABLE graft.wplan.plain (k BIGINT, v STRING) USING clickhouse_native")
+    spark.sql("""CREATE TABLE graft.wplan.sorted (k BIGINT, v STRING)
+                 USING clickhouse_native TBLPROPERTIES ('sortBy'='k')""")
+    spark.sql("""CREATE TABLE graft.wplan.bucketed (k BIGINT, v STRING)
+                 USING clickhouse_native PARTITIONED BY (bucket(4, k))""")
+    // the physical plan of the write command, below the write node
+    def writeInput(table: String): Seq[SparkPlan] = SparkTestBase.withAqeDisabled {
+      val insert = spark.sql(
+        // keys out of order, so a required sort cannot be elided as redundant
+        s"INSERT INTO graft.wplan.$table SELECT (id * 37) % 100 AS k, CAST(id AS STRING) AS v " +
+          "FROM range(100)")
+      val plan = insert.queryExecution.executedPlan.collectFirst {
+        case c: org.apache.spark.sql.execution.CommandResultExec => c.commandPhysicalPlan
+      }.getOrElse(insert.queryExecution.executedPlan)
+      val write = SparkTestBase.walkPlan(plan).collectFirst { case w: V2TableWriteExec => w }
+        .getOrElse(fail(s"no V2 write node in:\n$plan"))
+      SparkTestBase.walkPlan(write.query)
+    }
+    val plain = writeInput("plain")
+    assert(!plain.exists(p => p.isInstanceOf[ShuffleExchangeLike] || p.isInstanceOf[SortExec]),
+      plain.head.toString)
+    val sorted = writeInput("sorted")
+    val sorts = sorted.collect { case s: SortExec => s }
+    assert(sorts.length === 1 && !sorts.head.global, sorted.head.toString)
+    assert(!sorted.exists(_.isInstanceOf[ShuffleExchangeLike]), sorted.head.toString)
+    val bucketed = writeInput("bucketed")
+    assert(bucketed.exists(_.isInstanceOf[ShuffleExchangeLike]), bucketed.head.toString)
+    assert(spark.table("graft.wplan.sorted").count() === 100)
+    assert(spark.table("graft.wplan.bucketed").count() === 100)
+  }
+
   test("unbucketed catalog tables still join correctly (no layout claims)") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.plain")

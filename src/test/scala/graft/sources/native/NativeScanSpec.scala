@@ -225,6 +225,28 @@ class NativeScanSpec extends AnyFunSuite {
     failsNamingFile(d4, f4, "lz4 byte flip")
   }
 
+  test("count(*) over a truncated unindexed file fails naming the file") {
+    val (_, part) = writePart("count-trunc", 200000)
+    val cut = part.length() / 2
+    assert(!sidecarOffsets(part).contains(cut))
+    // a foreign-style copy: cut inside a block, no sidecar beside it
+    val dir = tmpDir("count-trunc-copy")
+    new java.io.File(dir).mkdirs()
+    val copy = new java.io.File(dir, part.getName)
+    Files.write(copy.toPath, Files.readAllBytes(part.toPath).take(cut.toInt))
+    val df = spark.sql(s"SELECT count(*) FROM clickhouse_native('$dir')")
+    assert(SparkTestBase.walkPlan(df.queryExecution.executedPlan).exists {
+      case b: BatchScanExec => b.scan.isInstanceOf[NativeCountScan]
+      case _ => false
+    }, df.queryExecution.executedPlan.toString)
+    val e = intercept[Exception](df.collect())
+    assert(causes(e).exists {
+      case io: IOException => io.getMessage.contains("corrupt or truncated file") &&
+        io.getMessage.contains(copy.getPath)
+      case _ => false
+    }, e.toString)
+  }
+
   test("hostile block structure fails with an IOException in the typed decoder") {
     def block(cols: (String, String, NativeCodec.Output => Unit)*)(rows: Int): Array[Byte] = {
       val bos = new ByteArrayOutputStream()

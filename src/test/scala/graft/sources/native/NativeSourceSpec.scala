@@ -253,7 +253,7 @@ class NativeSourceSpec extends AnyFunSuite {
     val conf = new org.apache.hadoop.conf.Configuration()
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.LongType)))
-    val writer = new NativeDataWriter(schema, dir, 0, 1L, 4, conf)
+    val writer = new NativeDataWriter(NativeWriteOptions(schema, dir, maxRowsPerFile = 4), 0, 1L, conf)
     writer.write(org.apache.spark.sql.catalyst.InternalRow(1L))
     writer.abort()
     assert(new java.io.File(dir).listFiles()
