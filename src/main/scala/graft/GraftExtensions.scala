@@ -397,9 +397,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         // reference arity: (query); connection comes from CLICKHOUSE_*
         // env exactly like src/clickhouse_scan.rs:59-71. An optional
         // second literal names the endpoint, scheme-routed to the
-        // transport: tcp://host:port (protocol client),
-        // socket://host:port (raw stream), file:///path (recorded
-        // response — the offline harness's server double).
+        // transport: file:///path (recorded response — the offline
+        // harness's server double), anything else the tcp protocol
+        // client's url (tcp://host:port; other schemes are refused).
         require(children.nonEmpty && children.length <= 2,
           "clickhouse_scan takes (query[, url])")
         val base = Map("query" -> stringLit("clickhouse_scan", children.head))
@@ -408,8 +408,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           if (url.startsWith("file://"))
             base + ("transport" -> "file",
               "responsePath" -> url.stripPrefix("file://"))
-          else if (url.startsWith("socket://"))
-            base + ("transport" -> "socket", "url" -> url)
           else base + ("url" -> url)
         } else base
         tvfRelation(new graft.sources.remote.ClickHouseRemoteDataSource, opts)

@@ -522,8 +522,10 @@ object Similarity {
   def pqCodebookSampled(candidates: DataFrame, m: Int, dim: Int,
       ksub: Int = 256, seed: Long = 42L): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
+    // `x + 0.0f` maps -0.0 to 0.0 (as distinct() and groupBy do), so equal
+    // subvectors hash to one hk and the aggregate keeps one of them
     val hashed = subVectors(candidates.select(col("vec_id"), col("embedding")), m, dim)
-      .select(col("s"), col("sub").as("centroid"))
+      .select(col("s"), transform(col("sub"), x => x + lit(0.0f)).as("centroid"))
       .withColumn("hk", xxhash64(col("centroid").cast("string"), lit(seed)))
     hashed.groupBy("s")
       .agg(Bridge.column(graft.functions.MinKDistinctAgg(

@@ -10,10 +10,9 @@ package graft.sources.native
  * Used by [[NativeCompression]] to checksum compressed frames. Our own
  * write→read roundtrip verifies against this implementation
  * bidirectionally (fuzz-covered); equality with a live ClickHouse
- * server's checksums could not be differentially validated in this
- * offline environment — `graft.native.checksum=skip` is the documented
- * escape hatch if a foreign file's checksums disagree structurally
- * (sizes still validate).
+ * server's checksums has not been differentially validated. A mismatch
+ * always fails the read with a named error; there is no switch that
+ * skips verification.
  */
 private[native] object CityHash102 {
   private val k0 = 0xc3a5c85c97cb3127L

@@ -203,8 +203,7 @@ private[sources] object NativeIO {
    * without touching data. The validated sidecar's writer-declared
    * compression rides into the probe — the same authority the
    * partition readers use — so files this writer produced are never
-   * sniffed (and checksum=skip, which forbids sniffing, still works);
-   * an unreadable sidecar means sniff.
+   * sniffed; an unreadable sidecar means sniff.
    */
   def header(st: FileStatus, conf: Configuration): Seq[(String, ChType)] = {
     val p = st.getPath
@@ -493,6 +492,15 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
   override def toBatch: Batch = this
 
   /**
+   * The scan's one file listing, taken on first use — the snapshot
+   * semantics of Spark's own file index. Layout, statistics and every
+   * partition plan (including the re-plan after a runtime filter) read
+   * it, so they always describe the same files; a file that lands after
+   * the listing is seen by the next query, not half-seen by this one.
+   */
+  private lazy val files: Seq[FileStatus] = NativeIO.resolveFileStatuses(paths, conf.value)
+
+  /**
    * Bucketed catalog tables report KeyGroupedPartitioning over
    * `bucket(n, col)` — the hook storage-partitioned joins hang off:
    * two native tables bucketed the same way on their join key plan
@@ -501,31 +509,25 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
    * table polluted with foreign files degrades to unknown layout, not
    * wrong co-location. At 100 TB this is THE fact-fact join strategy:
    * the shuffle happens once at ingest, never again per query.
+   * Value: (column, bucket count, number of distinct bucket ids).
    */
-  private lazy val bucketLayout: Option[(String, Int, Map[String, Int])] =
+  private lazy val bucketLayout: Option[(String, Int, Int)] =
     bucket.flatMap { case (col, n) =>
-      val sts = try NativeIO.resolveFileStatuses(paths, conf.value)
-        catch { case _: Exception => Seq.empty }
-      val tags = sts.map(st =>
-        st.getPath.toString -> NativeBucket.bucketOfFile(st.getPath.getName))
+      val tags = files.map(st => NativeBucket.bucketOfFile(st.getPath.getName))
       // a tag >= n means the files were written under a DIFFERENT bucket
       // count (table recreated?) — claiming key-grouped layout then
       // would co-locate rows that do not share a key: degrade instead.
-      // An EMPTY listing (no files yet, or a listing failure swallowed
-      // above) must also degrade: `forall` over nothing is vacuously
-      // true, and claiming layout off a failed listing would key-group
-      // a join against partitions that later plan with unknown buckets.
-      if (tags.nonEmpty && tags.forall(t => t._2.isDefined && t._2.get < n))
-        Some((col, n, tags.map { case (p, t) => p -> t.get }.toMap))
+      // An EMPTY listing must also degrade: `forall` over nothing is
+      // vacuously true.
+      if (tags.nonEmpty && tags.forall(_.exists(_ < n))) Some((col, n, tags.flatten.distinct.size))
       else None
     }
 
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
     bucketLayout match {
-      case Some((col, n, fileBuckets)) if required.fieldNames.contains(col) =>
+      case Some((col, n, groups)) if required.fieldNames.contains(col) =>
         new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-          Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(n, col)),
-          fileBuckets.values.toSet.size)
+          Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(n, col)), groups)
       case _ =>
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     }
@@ -567,17 +569,14 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
    * scan defaults to "unknown size" and joins pessimistically.
    */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val resolved =
-      try NativeIO.resolveFileStatuses(paths, conf.value)
-      catch { case _: Exception => Seq.empty }
     private lazy val totalBytes: OptionalLong =
-      if (resolved.isEmpty) OptionalLong.empty()
-      else OptionalLong.of(resolved.map(_.getLen).sum)
+      if (files.isEmpty) OptionalLong.empty()
+      else OptionalLong.of(files.map(_.getLen).sum)
     // Exact row count from the index sidecars — but only when EVERY
     // file has one (a partial sum would mislead the CBO low).
     private lazy val totalRows: OptionalLong =
       try {
-        val counts = resolved.map { st =>
+        val counts = files.map { st =>
           NativeIndex.read(st.getPath.getFileSystem(conf.value), st.getPath, st.getLen)
             .map(_.map(_.rows).sum)
         }
@@ -612,46 +611,17 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
    * also a residual Spark re-evaluates per row.
    */
   override def planInputPartitions(): Array[InputPartition] = {
-    val statuses = NativeIO.resolveFileStatuses(paths, conf.value)
     val target = SparkSession.getActiveSession
-      .map(FilePartition.maxSplitBytes(_, Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))))
+      .map(FilePartition.maxSplitBytes(_, Seq(PartitionDirectory(InternalRow.empty, files.toArray))))
       .getOrElse(128L * 1024 * 1024)
     val pruning = effectiveFilters
-    val layoutClaimed = bucketLayout.isDefined
-    // When key-grouped layout was claimed, outputPartitioning() already
-    // reported numPartitions off the snapshot's bucket-id set — a file
-    // whose bucket id is NOT in that set (concurrent ingest under a
-    // different layout) would mis-group, so it must fail like an
-    // untagged file does, not silently join a phantom group.
-    val snapshotBuckets = bucketLayout.map(_._3.values.toSet)
-    statuses.flatMap { st =>
+    files.flatMap { st =>
       val p = st.getPath
-      // bucket id parses from THIS listing's file names, not the layout
-      // snapshot — a file that appeared between the two listings still
-      // gets its true bucket. If layout was claimed but an untagged
-      // file materialized since, silence would mis-co-locate: fail.
-      val bucketId = NativeBucket.bucketOfFile(p.getName) match {
-        case Some(b) if layoutClaimed && !snapshotBuckets.get.contains(b) =>
-          throw new IllegalStateException(
-            s"clickhouse_native: data file ${p.getName} carries bucket id $b, " +
-              "absent from the layout snapshot this plan's partitioning was " +
-              "reported from (concurrent ingest?) — cannot key-group safely; " +
-              "retry the query")
-        case Some(b) => b
-        case None if layoutClaimed => throw new IllegalStateException(
-          s"clickhouse_native: untagged data file ${p.getName} appeared in a " +
-            "bucketed table between layout planning and partition planning — " +
-            "cannot key-group safely; retry the query")
-        case None => -1
-      }
+      // -1 when untagged; a bucketed layout is only claimed when every
+      // listed file carries a tag, and partitions come from the same list
+      val bucketId = NativeBucket.bucketOfFile(p.getName).getOrElse(-1)
       // small files skip the sidecar RPC unless filters could prune them
-      // — EXCEPT under checksum=skip with no explicit compression conf:
-      // skip forbids sniffing, so the reader needs the sidecar's
-      // writer-declared method (one extra RPC the user opted into)
-      val needsDeclaration =
-        "skip".equalsIgnoreCase(conf.value.get(NativeCompression.ChecksumConfKey, "verify")) &&
-          "auto".equalsIgnoreCase(conf.value.get(NativeCompression.ReadConfKey, "auto"))
-      if (st.getLen <= target && pruning.isEmpty && !needsDeclaration)
+      if (st.getLen <= target && pruning.isEmpty)
         Seq(NativeInputPartition(p.toString, bucketId = bucketId))
       else NativeIndex.readWithMeta(p.getFileSystem(conf.value), p, st.getLen) match {
         case Some((entries, meta)) =>
@@ -960,7 +930,7 @@ private[native] class NativeBatchWrite(o: NativeWriteOptions, truncateFirst: Boo
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     fs.mkdirs(dir)
     if (o.insertDedup && !truncateFirst)
-      preexistingSnapshot = fs.listStatus(dir).iterator.map(_.getPath.getName)
+      preexistingSnapshot = fs.listStatus(dir).iterator.filter(_.isFile).map(_.getPath.getName)
         .filter(n => NativeIndex.partOf(n).contains(n)).toSet
     // NOTE: an overwrite does NOT clear the target here. Deleting
     // before the tasks run destroys the old data while a self-read

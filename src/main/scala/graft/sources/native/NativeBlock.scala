@@ -36,6 +36,26 @@ final case class NativeBlock(columns: Array[NativeColumn], numRows: Int)
  */
 object ColumnCodec {
 
+  /**
+   * The column section of one block body, after its `n_columns, n_rows`
+   * header: per column name, type, then `nRows` values — decoded when
+   * `projection` keeps the name (None = all), skip-decoded otherwise.
+   */
+  def decodeColumns(in: Input, nCols: Int, nRows: Int,
+      projection: Option[Set[String]]): NativeBlock = {
+    val cols = Array.newBuilder[NativeColumn]
+    var c = 0
+    while (c < nCols) {
+      val name = in.readString()
+      val chType = ChType.parse(in.readString())
+      if (projection.forall(_.contains(name)))
+        cols += NativeColumn(name, chType, decode(in, chType, nRows))
+      else skip(in, chType, nRows)
+      c += 1
+    }
+    NativeBlock(cols.result(), nRows)
+  }
+
   /** Decode `rows` values of `t` from `in` into a Catalyst-value array. */
   def decode(in: Input, t: ChType, rows: Int): Array[Any] = {
     val out = new Array[Any](rows)

@@ -58,19 +58,7 @@ final class NativeBlockReader(stream: InputStream, projection: Option[Set[String
   override def hasNext: Boolean = {
     if (nextBlock != null) return true
     if (!nextHeader()) return false
-    val cols = Array.newBuilder[NativeColumn]
-    var c = 0
-    while (c < nCols) {
-      val name = in.readString()
-      val chType = ChType.parse(in.readString())
-      if (projection.forall(_.contains(name))) {
-        cols += NativeColumn(name, chType, ColumnCodec.decode(in, chType, nRows))
-      } else {
-        ColumnCodec.skip(in, chType, nRows)
-      }
-      c += 1
-    }
-    nextBlock = NativeBlock(cols.result(), nRows)
+    nextBlock = ColumnCodec.decodeColumns(in, nCols, nRows, projection)
     true
   }
 

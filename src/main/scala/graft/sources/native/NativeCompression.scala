@@ -35,13 +35,10 @@ private[sources] object NativeCompression {
   /** Frame payload cap (uncompressed) — ClickHouse's max_compress_block_size default. */
   val MaxFrameBytes: Int = 1 << 20
 
-  /** Hadoop-conf key: "skip" disables checksum verification on read
-   *  (structural size checks still apply). See [[CityHash102]]. */
-  val ChecksumConfKey = "graft.native.checksum"
   /** Hadoop-conf key: declare the read-side compression explicitly
    *  (`none|lz4|zstd`) instead of sniffing — the escape hatch for the
-   *  (pathological) foreign file whose bytes coincidentally sniff as a
-   *  frame header, or for skipping checksums on undeclared files.
+   *  (pathological) sidecar-less foreign file whose first bytes
+   *  coincidentally sniff as a frame header.
    *  Default "auto" = sidecar declaration if present, else sniff. */
   val ReadConfKey = "graft.native.read.compression"
 
@@ -64,22 +61,18 @@ private[sources] object NativeCompression {
    *   3. sniff the first frame header (foreign / sidecar-less files).
    *
    * Sniffing is a heuristic (a raw Native file's first 25 bytes could
-   * coincidentally form a plausible frame header), so checksum
-   * verification is what surfaces a misclassification — therefore
-   * `checksum=skip` is REFUSED on a sniffed file: declare the method
-   * via conf or sidecar to skip checksums.
+   * coincidentally form a plausible frame header); every frame's
+   * checksum is verified, so a misclassification fails with a named
+   * error instead of decoding garbage.
    */
   def maybeWrapRead(raw: InputStream, conf: Configuration,
       declared: Option[String] = None): InputStream = {
     val in = new BufferedInputStream(raw, 64 * 1024)
-    val skip = conf != null && "skip".equalsIgnoreCase(conf.get(ChecksumConfKey, "verify"))
     val confMethod = if (conf == null) "auto" else conf.get(ReadConfKey, "auto")
     val fromConf = !"auto".equalsIgnoreCase(confMethod)
     (if (fromConf) Some(confMethod.toLowerCase) else declared.map(_.toLowerCase)) match {
       case Some("none") => return in
-      case Some(m @ ("lz4" | "zstd")) =>
-        methodFor(m) // validates
-        return new FrameInputStream(in, verify = !skip)
+      case Some("lz4" | "zstd") => return new FrameInputStream(in)
       case Some(other) if fromConf => throw new IllegalArgumentException(
         s"clickhouse_native read compression must be auto|none|lz4|zstd, got '$other'")
       case Some(_) =>
@@ -106,12 +99,7 @@ private[sources] object NativeCompression {
       comp >= HeaderLen && comp <= MaxFrameBytes * 4 + HeaderLen &&
       uncomp >= 0 && uncomp <= MaxFrameBytes * 64 &&
       (method != MethodNone || comp == uncomp + HeaderLen)
-    if (!plausible) in
-    else if (skip) throw new IllegalStateException(
-      s"clickhouse_native: $ChecksumConfKey=skip with a SNIFFED compression " +
-        s"method — a misclassified file would decode garbage silently. Declare " +
-        s"the method ($ReadConfKey=none|lz4|zstd) or re-enable checksums.")
-    else new FrameInputStream(in, verify = true)
+    if (plausible) new FrameInputStream(in) else in
   }
 
   @inline private[native] def readIntLE(b: Array[Byte], i: Int): Int =
@@ -202,10 +190,11 @@ private[sources] final class FrameOutputStream(out: OutputStream, method: Byte)
 
 /**
  * Decompressing frame reader: serves the concatenated decompressed
- * stream, pulling one frame at a time. EOF cleanly at a frame
- * boundary; truncation inside a frame raises.
+ * stream, pulling one frame at a time, each checked against its
+ * CityHash128 checksum. EOF cleanly at a frame boundary; truncation
+ * inside a frame raises.
  */
-private[sources] final class FrameInputStream(in: InputStream, verify: Boolean)
+private[sources] final class FrameInputStream(in: InputStream)
     extends InputStream {
   import NativeCompression._
 
@@ -246,18 +235,12 @@ private[sources] final class FrameInputStream(in: InputStream, verify: Boolean)
         s"corrupt frame: implausible uncompressed_size $uncomp")
     val payload = new Array[Byte](comp - HeaderLen)
     readFully(payload, 0, payload.length, allowEofAtStart = false)
-    if (verify) {
-      val whole = new Array[Byte](HeaderLen + payload.length)
-      System.arraycopy(head, ChecksumLen, whole, 0, HeaderLen)
-      System.arraycopy(payload, 0, whole, HeaderLen, payload.length)
-      val h = CityHash102.cityHash128(whole, 0, whole.length)
-      val (lo, hi) = (readLongLE(head, 0), readLongLE(head, 8))
-      if (h(0) != lo || h(1) != hi)
-        throw new java.io.IOException(
-          "compressed frame checksum mismatch (CityHash128 v1.0.2). If this " +
-            s"file comes from another engine, set ${NativeCompression.ChecksumConfKey}=skip " +
-            "(sizes are still validated structurally).")
-    }
+    val whole = new Array[Byte](HeaderLen + payload.length)
+    System.arraycopy(head, ChecksumLen, whole, 0, HeaderLen)
+    System.arraycopy(payload, 0, whole, HeaderLen, payload.length)
+    val h = CityHash102.cityHash128(whole, 0, whole.length)
+    if (h(0) != readLongLE(head, 0) || h(1) != readLongLE(head, 8))
+      throw new java.io.IOException("compressed frame checksum mismatch (CityHash128 v1.0.2)")
     cur = method match {
       case MethodLZ4 =>
         val dst = new Array[Byte](uncomp)

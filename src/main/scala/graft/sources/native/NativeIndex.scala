@@ -124,8 +124,9 @@ private[native] object NativeIndex {
 
   /**
    * Job-level reconcile of a write over ONE listing of `dir`: a job
-   * keeps exactly the parts its tasks reported. Deleted, each with its
-   * sidecar:
+   * keeps exactly the parts its tasks reported. Only files are parts:
+   * subdirectories (`detached/`, `projections/`) are never touched.
+   * Deleted, each with its sidecar:
    *  - parts of this write (`mine`) that are not in `kept` — left by a
    *    task attempt that died before its own abort ran, or, with
    *    `kept` empty (job abort), every part of this write;
@@ -139,11 +140,11 @@ private[native] object NativeIndex {
     listing.filter { st =>
       val n = st.getPath.getName
       partOf(n) match {
-        case Some(part) =>
+        case Some(part) if st.isFile =>
           val doomed = if (mine(part)) !kept(part) else dropOthers
-          if (doomed) fs.delete(st.getPath, true)
+          if (doomed) fs.delete(st.getPath, false)
           !doomed && part == n
-        case None => false
+        case _ => false
       }
     }
   }

@@ -56,7 +56,7 @@ final class ChTcpClient private (sock: Socket, rawIn: java.io.InputStream,
         * socket; the block decode drains it exactly). */
       private def body[T](decode: Input => T): T = {
         in.readString() // temporary-table name
-        if (compress) decode(new Input(new graft.sources.native.FrameInputStream(rawIn, verify = true)))
+        if (compress) decode(new Input(new graft.sources.native.FrameInputStream(rawIn)))
         else decode(in)
       }
       /** Packets up to the next Data block, decoded by `decode`. */

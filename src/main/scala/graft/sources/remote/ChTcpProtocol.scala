@@ -2,7 +2,7 @@ package graft.sources.remote
 
 import java.io.IOException
 
-import graft.sources.native.{ChType, ColumnarDecoder, ColumnCodec, NativeBlock, NativeBlockReader, NativeColumn}
+import graft.sources.native.{ColumnarDecoder, ColumnCodec, NativeBlock, NativeBlockReader}
 import graft.sources.native.NativeCodec.{Input, Output}
 
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -237,19 +237,7 @@ object ChTcpProtocol {
     * [[readBatchBody]]. */
   def readBlockBody(in: Input, negotiated: Long, projection: Option[Set[String]]): NativeBlock = {
     val (nCols, nRows) = readBlockShape(in, negotiated)
-    val cols = Array.newBuilder[NativeColumn]
-    var c = 0
-    while (c < nCols) {
-      val name = in.readString()
-      val chType = ChType.parse(in.readString())
-      if (projection.forall(_.contains(name))) {
-        cols += NativeColumn(name, chType, ColumnCodec.decode(in, chType, nRows))
-      } else {
-        ColumnCodec.skip(in, chType, nRows)
-      }
-      c += 1
-    }
-    NativeBlock(cols.result(), nRows)
+    ColumnCodec.decodeColumns(in, nCols, nRows, projection)
   }
 
   /** [[readBlockBody]] decoded straight into `decoder`'s column vectors. */

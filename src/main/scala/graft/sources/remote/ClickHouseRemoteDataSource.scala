@@ -33,15 +33,14 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
  * query string executes verbatim on the server
  * (src/clickhouse_scan.rs:78,131); Spark-side operators apply on top.
  *
- * Transport is pluggable:
+ * Two transports:
  *  - `transport=file` — a recorded-response double: reads the Native
  *    byte stream a server would have sent from `responsePath`. This is
  *    what the offline harness exercises (there is no server in CI —
  *    the reference's own remote test is commented out for the same
  *    reason, test/sql/chsql_native.test:22-27).
- *  - `transport=socket` — handshake-less byte streaming to host:port
- *    (query out, Native blocks back until EOF).
- *  - `transport=tcp` — the real ClickHouse native TCP protocol:
+ *  - `transport=tcp` (the default) — the real ClickHouse native TCP
+ *    protocol, `url` = `tcp://host:port` or bare `host:port`:
  *    hello handshake, protocol revision negotiation, Query packet
  *    with client info, and the server packet stream (Data / Progress /
  *    ProfileInfo / Log / Totals / Extremes / Exception / EndOfStream)
@@ -54,6 +53,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
  *    `sslTruststorePassword` (PKCS12/JKS), or
  *    `sslInsecureSkipVerify=true` for self-signed lab rigs; endpoint
  *    identity is verified by default ([[ChTcpClient.Tls]]).
+ * Any other transport, or a url scheme other than `tcp://`, fails
+ * with an IllegalArgumentException naming it.
  *
  * Unlike the reference — which runs the remote query TWICE (bind and
  * init, src/clickhouse_scan.rs:78,126-131) and stringifies every cell
@@ -95,13 +96,15 @@ final case class TransportSpec(
     compression: Boolean = false,
     tls: ChTcpClient.Tls = ChTcpClient.Tls()) extends Serializable {
 
-  /** host:port from the url (tcp:// and socket:// prefixes accepted;
-    * IPv6 literals in brackets, e.g. tcp://[::1]:9000). */
+  /** host:port from the url (`tcp://` prefix optional; IPv6 literals
+    * in brackets, e.g. tcp://[::1]:9000). Any other scheme is refused. */
   private def hostPort: (String, Int) = {
-    val hp = url.stripPrefix("tcp://").stripPrefix("socket://")
+    val hp = url.stripPrefix("tcp://")
+    if (hp.contains("://")) throw new IllegalArgumentException(
+      s"clickhouse_remote: unsupported url scheme in '$url' — expected tcp://host:port")
     hp.lastIndexOf(':') match {
       case -1 => throw new IllegalArgumentException(
-        s"clickhouse_remote transport=$transport: url must be host:port, got '$url'")
+        s"clickhouse_remote transport=tcp: url must be host:port, got '$url'")
       case i =>
         val host = hp.substring(0, i).stripPrefix("[").stripSuffix("]")
         (host, hp.substring(i + 1).toInt)
@@ -110,8 +113,8 @@ final case class TransportSpec(
 
   /**
    * The remote result as a stream of Native blocks, however carried.
-   * file/socket transports are raw block byte streams; tcp interleaves
-   * blocks with protocol packets, so the seam is block-level.
+   * A file is a raw block byte stream; tcp interleaves blocks with
+   * protocol packets, so the seam is block-level.
    */
   def openSource(): RemoteBlockSource = transport match {
     case "tcp" =>
@@ -119,8 +122,7 @@ final case class TransportSpec(
       ChTcpClient.connect(host, port, user, password, database, timeoutMs, tls)
         .execute(query, None, compress = compression)
     case _ =>
-      val reader = new NativeBlockReader(
-        graft.sources.native.NativeCompression.maybeWrapRead(open(), null))
+      val reader = new NativeBlockReader(openResponse())
       new RemoteBlockSource {
         override def nextBlock(): Option[graft.sources.native.NativeBlock] =
           if (reader.hasNext) Some(reader.next()) else None
@@ -134,7 +136,7 @@ final case class TransportSpec(
     * rows, so the probe reads one packet and then CANCELS the query
     * (the source's close sends ClientPacket.Cancel when abandoning
     * mid-stream) — the server stops computing instead of running the
-    * probe to completion against a dead socket. */
+    * probe to completion against a dead connection. */
   def header(): Seq[(String, ChType)] = transport match {
     case "tcp" =>
       // the server's first Data packet is a rowless header block
@@ -143,48 +145,16 @@ final case class TransportSpec(
         .getOrElse(Seq.empty)
       finally src.close()
     case _ =>
-      val stream = graft.sources.native.NativeCompression.maybeWrapRead(open(), null)
+      val stream = openResponse()
       try NativeBlockReader.readHeader(stream) finally stream.close()
   }
 
-  def open(): InputStream = transport match {
-    case "file" =>
-      require(responsePath.nonEmpty,
-        "clickhouse_remote with transport=file requires option responsePath")
-      val p = new Path(responsePath)
-      p.getFileSystem(conf.value).open(p)
-    case "socket" =>
-      // Handshake-less streaming over a real TCP connection: send the
-      // query (UTF-8, LEB128 length prefix — the Native string wire
-      // encoding), stream the server's Native-block response until it
-      // closes. Every opener (driver schema probe, each executor
-      // partition) dials its own connection — the connection-per-
-      // partition shape a full client needs, minus the protocol
-      // negotiation the `tcp` case documents as descoped.
-      val (host, port) = hostPort
-      // bounded connect/read waits: a black-holed connection must fail
-      // the task, not hang it forever; close the socket on ANY failure
-      // before the wrapping stream takes ownership
-      val sock = new java.net.Socket()
-      try {
-        sock.setTcpNoDelay(true)
-        sock.setSoTimeout(timeoutMs)
-        sock.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
-        val out = sock.getOutputStream
-        new graft.sources.native.NativeCodec.Output(out).writeString(query)
-        out.flush()
-        sock.shutdownOutput() // half-close: response streams until server EOF
-        new java.io.FilterInputStream(
-            new java.io.BufferedInputStream(sock.getInputStream, 1 << 16)) {
-          override def close(): Unit = { super.close(); sock.close() }
-        }
-      } catch { case e: Throwable => sock.close(); throw e }
-    case "tcp" =>
-      throw new IllegalStateException(
-        "clickhouse_remote: transport=tcp is packet-framed, not a raw block " +
-          "stream — use openSource()/header() (internal invariant)")
-    case other =>
-      throw new IllegalArgumentException(s"clickhouse_remote: unknown transport '$other'")
+  /** transport=file: the recorded response, decompressing if framed. */
+  private def openResponse(): InputStream = {
+    require(responsePath.nonEmpty,
+      "clickhouse_remote with transport=file requires option responsePath")
+    val p = new Path(responsePath)
+    graft.sources.native.NativeCompression.maybeWrapRead(p.getFileSystem(conf.value).open(p), null)
   }
 }
 
@@ -201,7 +171,11 @@ trait RemoteBlockSource extends BatchSource {
 
 object TransportSpec {
   def fromOptions(options: CaseInsensitiveStringMap): TransportSpec = TransportSpec(
-    transport = Option(options.get("transport")).getOrElse("tcp"),
+    transport = Option(options.get("transport")).getOrElse("tcp") match {
+      case t @ ("tcp" | "file") => t
+      case other => throw new IllegalArgumentException(
+        s"clickhouse_remote: unknown transport '$other' — expected tcp or file")
+    },
     query = Option(options.get("query")).getOrElse(
       throw new IllegalArgumentException("clickhouse_remote requires option 'query'")),
     // env fallbacks mirror the reference (src/clickhouse_scan.rs:59-71,

@@ -1073,24 +1073,38 @@ class LlmOpsSpec extends AnyFunSuite {
     // (a) result equivalence with the single-window global-rank
     // spelling over distinct subvectors and (b) the plan shape.
     import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
     val m = 4; val ksub = 16; val seed = 42L
     val dim = emb.head().getAs[Seq[Float]]("embedding").size
-    val wdt = dim / m
-    val subs = emb.select(col("vec_id"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          s => slice(col("embedding"), s * wdt + 1, lit(wdt)))).as(Seq("s", "sub")))
-      .select(col("s"), col("sub").as("centroid")).distinct()
-    // (a) the unbounded reference spelling
-    val global = subs.withColumn("code", row_number().over(
-        Window.partitionBy("s").orderBy(
-          xxhash64(col("centroid").cast("string"), lit(seed)), col("centroid"))))
-      .filter(col("code") <= ksub)
-      .collect().map(r => (r.getInt(0), r.getInt(2),
-        r.getSeq[Float](1).mkString(","))).toSet
-    val staged = Similarity.pqCodebookSampled(emb, m, dim, ksub, seed)
-      .collect().map(r => (r.getInt(0), r.getInt(2),
-        r.getSeq[Float](1).mkString(","))).toSet
-    assert(staged === global)
+    // (a) the unbounded reference spelling, over distinct subvectors
+    def global(df: org.apache.spark.sql.DataFrame, dim: Int) = {
+      val wdt = dim / m
+      df.select(col("vec_id"),
+          posexplode(transform(sequence(lit(0), lit(m - 1)),
+            s => slice(col("embedding"), s * wdt + 1, lit(wdt)))).as(Seq("s", "sub")))
+        .select(col("s"), col("sub").as("centroid")).distinct()
+        .withColumn("code", row_number().over(
+          Window.partitionBy("s").orderBy(
+            xxhash64(col("centroid").cast("string"), lit(seed)), col("centroid"))))
+        .filter(col("code") <= ksub)
+        .collect().map(r => (r.getInt(0), r.getInt(2),
+          r.getSeq[Float](1).mkString(","))).toSet
+    }
+    def staged(df: org.apache.spark.sql.DataFrame, dim: Int) =
+      Similarity.pqCodebookSampled(df, m, dim, ksub, seed)
+        .collect().map(r => (r.getInt(0), r.getInt(2),
+          r.getSeq[Float](1).mkString(","))).toSet
+    assert(staged(emb, dim) === global(emb, dim))
+    // -0.0 and 0.0 subvectors are one distinct value (Spark's float
+    // grouping semantics): one centroid, not two
+    val signedZeros = Seq(
+      0L -> Seq(0.0f, 1.0f, 2.0f, 3.0f, 4.0f, 5.0f, 6.0f, 7.0f),
+      1L -> Seq(-0.0f, 1.0f, 2.0f, 3.0f, 4.0f, 5.0f, 6.0f, -0.0f),
+      2L -> Seq(0.5f, -0.0f, 2.0f, 3.0f, 4.0f, 5.0f, 6.0f, 0.0f)).toDF("vec_id", "embedding")
+    val zs = staged(signedZeros, 8)
+    assert(zs === global(signedZeros, 8))
+    assert(zs.toSeq.groupBy(_._1).map { case (s, c) => s -> c.size } ===
+      Map(0 -> 2, 1 -> 1, 2 -> 1, 3 -> 2), zs)
     // (b) the codebook plan carries no window, no dedup aggregate on
     // the subvector stream — just the bounded object aggregate
     val plan = Similarity.pqCodebookSampled(emb, m, dim, ksub, seed)

@@ -340,31 +340,45 @@ class NativeCatalogSpec extends AnyFunSuite {
     }
   }
 
-  test("bucket-id drift between layout snapshot and partition planning fails loudly") {
+  test("a bucket file that lands after the scan listed is in neither its layout nor its partitions") {
+    import org.apache.spark.sql.connector.read.{Scan, SupportsReportPartitioning,
+      SupportsRuntimeFiltering}
+    import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
+    import org.apache.spark.sql.sources.{Filter, In}
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
-    // seed the table with one tagged file (content is never opened:
-    // layout and partition planning only look at names and lengths)
+    val dir = java.nio.file.Files.createTempDirectory("graft-late").toString
+    // tagged files whose content is never opened: layout and partition
+    // planning only look at names and lengths
     def drop(name: String): Unit = {
-      val f = new java.io.File(dir, name)
-      val out = new java.io.FileOutputStream(f)
+      val out = new java.io.FileOutputStream(new java.io.File(dir, name))
       out.write(Array.fill[Byte](64)(1)); out.close()
     }
     drop(NativeBucket.filePrefix(0) + "part-00000-1-aaaa-000.clickhouse")
     val schema = StructType(Seq(StructField("k", LongType)))
-    val scan = new NativeScanBuilder(schema, Seq(dir), bucket = Some(("k", 4))).build()
-    // claim the layout off the current (snapshot) listing
-    scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportPartitioning].outputPartitioning()
-    // concurrent ingest materializes a bucket id the snapshot never saw
+    def newScan() = new NativeScanBuilder(schema, Seq(dir), bucket = Some(("k", 4))).build()
+    def groups(scan: Scan): Int =
+      scan.asInstanceOf[SupportsReportPartitioning].outputPartitioning() match {
+        case k: KeyGroupedPartitioning => k.numPartitions()
+        case other => fail(s"expected key-grouped layout, got $other")
+      }
+    def bucketsOf(scan: Scan): Seq[Int] =
+      scan.toBatch.planInputPartitions().map(_.asInstanceOf[NativeInputPartition].bucketId).toSeq
+    val scan = newScan()
+    assert(groups(scan) === 1)
+    // concurrent ingest lands a new bucket id and an untagged file
     drop(NativeBucket.filePrefix(2) + "part-00000-1-bbbb-000.clickhouse")
-    val e = intercept[IllegalStateException](scan.toBatch.planInputPartitions())
-    assert(e.getMessage.contains("bucket id 2"), e.getMessage)
-    // a late file in an ALREADY-SNAPSHOTTED bucket just joins its group
-    // (group count unchanged), so planning succeeds
-    assert(new java.io.File(dir,
-      NativeBucket.filePrefix(2) + "part-00000-1-bbbb-000.clickhouse").delete())
-    drop(NativeBucket.filePrefix(0) + "part-00000-1-cccc-000.clickhouse")
-    assert(scan.toBatch.planInputPartitions().length === 2)
+    drop("foreign.clickhouse")
+    assert(bucketsOf(scan) === Seq(0))
+    // the runtime-filter re-plan reads the same listing
+    scan.asInstanceOf[SupportsRuntimeFiltering].filter(Array[Filter](In("k", Array[Any](1L, 2L))))
+    assert(bucketsOf(scan) === Seq(0))
+    assert(groups(scan) === 1)
+    // the next scan lists again: the untagged file degrades its layout
+    assert(!newScan().asInstanceOf[SupportsReportPartitioning].outputPartitioning()
+      .isInstanceOf[KeyGroupedPartitioning])
+    assert(new java.io.File(dir, "foreign.clickhouse").delete())
+    val next = newScan()
+    assert(groups(next) === 2 && bucketsOf(next).sorted === Seq(0, 2))
   }
 
   test("ALTER TABLE ADD COLUMN: metadata-only evolution, old parts read as null") {

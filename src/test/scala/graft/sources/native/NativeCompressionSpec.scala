@@ -35,7 +35,7 @@ class NativeCompressionSpec extends AnyFunSuite {
       off += n
     }
     fo.close()
-    val in = new FrameInputStream(new ByteArrayInputStream(bos.toByteArray), verify = true)
+    val in = new FrameInputStream(new ByteArrayInputStream(bos.toByteArray))
     val out = in.readAllBytes()
     in.close()
     out
@@ -68,14 +68,9 @@ class NativeCompressionSpec extends AnyFunSuite {
     fo.close()
     val bytes = bos.toByteArray
     bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x40).toByte
-    val in = new FrameInputStream(new ByteArrayInputStream(bytes), verify = true)
+    val in = new FrameInputStream(new ByteArrayInputStream(bytes))
     val e = intercept[java.io.IOException](in.readAllBytes())
     assert(e.getMessage.contains("checksum"), e.getMessage)
-    // with verification skipped, the structural decode still runs (LZ4
-    // may or may not survive the flip — only the no-crash-on-skip
-    // contract when it does decode is asserted here)
-    val in2 = new FrameInputStream(new ByteArrayInputStream(bytes), verify = false)
-    try in2.readAllBytes() catch { case _: Exception => () }
   }
 
   test("sniffing: uncompressed native files pass through untouched") {
@@ -177,7 +172,7 @@ class NativeCompressionSpec extends AnyFunSuite {
     assert(one.length === 1 && one(0).getDouble(1) === 199998.0)
   }
 
-  test("writer declares compression in the sidecar; checksum=skip honors it, refuses sniffed") {
+  test("writer declares compression in the sidecar; an explicit read.compression overrides it") {
     val dir = tmpDir("declared")
     spark.range(0, 5000).selectExpr("id", "id * 2.0D AS v")
       .write.format("clickhouse_native").option("compression", "lz4")
@@ -189,43 +184,24 @@ class NativeCompressionSpec extends AnyFunSuite {
     val meta = NativeIndex.readWithMeta(fs, new Path(dataFile.getPath),
       dataFile.length()).get._2
     assert(meta.get("compression") === Some("lz4"))
-    // declared via sidecar → checksum=skip is allowed (no sniffing
-    // involved for partitions planned off the sidecar)
-    val declared = NativeCompression.maybeWrapRead(
-      new java.io.FileInputStream(dataFile), confWith("graft.native.checksum" -> "skip"),
-      declared = Some("lz4"))
-    try assert(declared.read() >= 0) finally declared.close()
-    // sniffed (no declaration) + skip → refuse: a misclassified file
-    // would decode garbage with nothing to catch it
-    val e = intercept[IllegalStateException] {
-      NativeCompression.maybeWrapRead(
-        new java.io.FileInputStream(dataFile), confWith("graft.native.checksum" -> "skip"))
-    }
-    assert(e.getMessage.contains("SNIFFED"))
-    // explicit conf declaration is the escape hatch
-    val viaConf = NativeCompression.maybeWrapRead(
-      new java.io.FileInputStream(dataFile),
-      confWith("graft.native.checksum" -> "skip",
-        "graft.native.read.compression" -> "lz4"))
-    try assert(viaConf.read() >= 0) finally viaConf.close()
-    // and the full read path (skip + sidecar declaration) works
-    // end-to-end. Runtime spark.conf.set("spark.hadoop.*") is NOT
-    // prefix-stripped into sessionState.newHadoopConf (only
-    // construction-time confs are), so set the SparkContext hadoop
-    // conf directly — the same surface --conf spark.hadoop.* feeds.
-    val hc = spark.sparkContext.hadoopConfiguration
-    val prev = Option(hc.get("graft.native.checksum"))
-    hc.set("graft.native.checksum", "skip")
-    // sum forces a real data read (count(*) is answered from the sidecar)
-    try {
-      assert(hadoopConf.get("graft.native.checksum") === "skip") // reaches reads
-      assert(spark.read.format("clickhouse_native").load(dir)
-        .agg(org.apache.spark.sql.functions.sum("v")).head().getDouble(0)
-        === (0L until 5000L).map(_ * 2.0).sum)
-    } finally prev match {
-      case Some(v) => hc.set("graft.native.checksum", v)
-      case None => hc.unset("graft.native.checksum")
-    }
+    def firstHeader(in: java.io.InputStream) =
+      try NativeBlockReader.readHeader(in).map(_._1) finally in.close()
+    // the declaration alone opens frames, no sniffing involved
+    assert(firstHeader(NativeCompression.maybeWrapRead(new java.io.FileInputStream(dataFile),
+      hadoopConf, declared = Some("lz4"))) === Seq("id", "v"))
+    // an explicit conf declaration wins over the sidecar's: declaring
+    // `none` hands back the file's own (framed) bytes untouched
+    val raw = NativeCompression.maybeWrapRead(new java.io.FileInputStream(dataFile),
+      confWith("graft.native.read.compression" -> "none"), declared = Some("lz4"))
+    try assert(raw.readNBytes(64).sameElements(
+      java.nio.file.Files.readAllBytes(dataFile.toPath).take(64)))
+    finally raw.close()
+    assert(firstHeader(NativeCompression.maybeWrapRead(new java.io.FileInputStream(dataFile),
+      confWith("graft.native.read.compression" -> "lz4"))) === Seq("id", "v"))
+    // and an unknown conf value is refused by name
+    val bad = intercept[IllegalArgumentException](NativeCompression.maybeWrapRead(
+      new java.io.FileInputStream(dataFile), confWith("graft.native.read.compression" -> "brotli")))
+    assert(bad.getMessage.contains("brotli"), bad.getMessage)
   }
 
   private def confWith(kv: (String, String)*): org.apache.hadoop.conf.Configuration = {

@@ -96,6 +96,43 @@ class NativeScanSpec extends AnyFunSuite {
     assert(parts.head.blockCount === -1)
   }
 
+  test("a scan lists its files once: statistics, layout, plan and the runtime re-plan share it") {
+    import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
+    import org.apache.spark.sql.sources.{Filter, GreaterThan}
+    val (dir, part) = writePart("listonce", 1000)
+    // the same part under two bucket tags: planning reads names and lengths only
+    val bucketed = Files.createTempDirectory("graft-scan-listonce-b").toString
+    Seq(0, 1).foreach(b => Files.copy(part.toPath,
+      new java.io.File(bucketed, NativeBucket.filePrefix(b) + part.getName).toPath))
+    val conf = hadoopConf
+    conf.set("fs.countglob.impl", classOf[CountGlobFileSystem].getName)
+    conf.setBoolean("fs.countglob.impl.disable.cache", true)
+    /** globStatus calls made while `use` drives one fresh scan of `d`. */
+    def listings(d: String, bucket: Option[(String, Int)])(use: NativeScan => Unit): Int = {
+      CountGlobFileSystem.calls.set(0)
+      use(new NativeScan(schema, schema, Seq(s"countglob://$d"), -1,
+        new SerializableHadoopConf(conf), bucket = bucket))
+      CountGlobFileSystem.calls.get
+    }
+    val plain = listings(dir, None) { scan =>
+      assert(scan.estimateStatistics().sizeInBytes().getAsLong === part.length())
+      assert(scan.planInputPartitions().length === 1)
+      scan.filter(Array[Filter](GreaterThan("id", 500L)))
+      assert(scan.planInputPartitions().length === 1)
+    }
+    assert(plain === 1)
+    val keyed = listings(bucketed, Some(("id", 2))) { scan =>
+      assert(scan.outputPartitioning().asInstanceOf[KeyGroupedPartitioning].numPartitions() === 2)
+      assert(scan.estimateStatistics().sizeInBytes().getAsLong === 2 * part.length())
+      def buckets =
+        scan.planInputPartitions().map(_.asInstanceOf[NativeInputPartition].bucketId).toSeq
+      assert(buckets === Seq(0, 1))
+      scan.filter(Array[Filter](GreaterThan("id", 500L)))
+      assert(buckets === Seq(0, 1))
+    }
+    assert(keyed === 1)
+  }
+
   test("bucketed tables keep their bucketId on every split") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.splitns")
@@ -287,4 +324,17 @@ class NativeScanSpec extends AnyFunSuite {
     decodeFails(block(("a", "Int32", out => out.writeIntLE(1)))(1), LongType,
       "in the read schema")
   }
+}
+
+/** Local file system that counts `globStatus` calls (scheme `countglob`). */
+class CountGlobFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countglob:///")
+  override def globStatus(pattern: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountGlobFileSystem.calls.incrementAndGet()
+    super.globStatus(pattern)
+  }
+}
+
+object CountGlobFileSystem {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
 }

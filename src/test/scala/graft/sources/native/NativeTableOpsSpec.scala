@@ -249,6 +249,27 @@ class NativeTableOpsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("not found"))
   }
 
+  test("overwrite keeps detached/: a detached part survives and re-attaches") {
+    import spark.implicits._
+    val dir = tmp("detach-ow")
+    makeTable(dir)
+    val part = partFiles(dir).head.getName
+    NativeTableOps.detachPart(spark, dir, part)
+    val detachedRows = 1000 - spark.read.format("clickhouse_native").load(dir).count()
+    assert(detachedRows > 0)
+
+    (0 until 10).map(i => (i.toLong, s"new_$i", 0)).toDF("id", "name", "grp")
+      .write.format("clickhouse_native").mode("overwrite").save(dir)
+    val sidecarName = NativeIndex.sidecarPath(new org.apache.hadoop.fs.Path(part)).getName
+    assert(new java.io.File(s"$dir/detached", part).exists(), "overwrite deleted the detached part")
+    assert(new java.io.File(s"$dir/detached", sidecarName).exists(),
+      "overwrite deleted the detached sidecar")
+    assert(spark.read.format("clickhouse_native").load(dir).count() === 10)
+
+    NativeTableOps.attachPart(spark, dir, part)
+    assert(spark.read.format("clickhouse_native").load(dir).count() === 10 + detachedRows)
+  }
+
   test("projections: reads route to the layout whose zone maps prune hardest") {
     val dir = tmp("proj")
     // base clustered by id → zone maps prune id, not grp

@@ -167,23 +167,26 @@ class ChTcpProtocolSpec extends AnyFunSuite {
   }
 
   /**
-   * Serve `sessions` connections; each reads the expected client bytes
-   * (asserting byte equality) and replies with the scripted packets.
-   * Mid-script client disconnects (the schema probe closes after the
-   * header block) are expected and swallowed.
+   * Serve connections until `body` returns; each reads the expected
+   * client bytes (asserting byte equality) and replies with the
+   * scripted packets. Mid-script client disconnects (the schema probe
+   * closes after the header block) are expected and swallowed.
+   * Returns the number of connections accepted.
    */
   private def withScriptedServer(expectHello: Array[Byte], sendHello: Array[Byte],
       expectQuery: Array[Byte], response: Array[Byte], tls: Boolean = false)(
-      body: Int => Unit): Unit = {
+      body: Int => Unit): Int = {
     val server =
       if (tls) sslServerSocket()
       else new ServerSocket(0, 8, java.net.InetAddress.getLoopbackAddress)
     val mismatches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val accepts = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile var closed = false
     val acceptor = new Thread(() => {
       while (!closed) {
         try {
           val s = server.accept()
+          accepts.incrementAndGet()
           try {
             s.setSoTimeout(20000)
             val in = s.getInputStream
@@ -222,12 +225,13 @@ class ChTcpProtocolSpec extends AnyFunSuite {
       server.close()
       assert(mismatches.isEmpty, mismatches.toString)
     }
+    accepts.get()
   }
 
   test("transport=tcp end-to-end: handshake, framing, schema, rows") {
     val response = headerBlock ++ progressModern ++ dataBlock ++
       profileInfo ++ emptyTailBlock ++ endOfStream
-    withScriptedServer(clientHelloGolden, serverHelloModern,
+    val accepted = withScriptedServer(clientHelloGolden, serverHelloModern,
       queryGoldenModern, response) { port =>
       val df = spark.read.format("clickhouse_remote")
         .option("transport", "tcp")
@@ -239,6 +243,9 @@ class ChTcpProtocolSpec extends AnyFunSuite {
       val rows = df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
       assert(rows === Seq((1L, "aa"), (2L, "bb"), (3L, "cc")))
     }
+    // the driver's schema probe and the executor's scan dial separately
+    // (connection per partition); the golden query bytes pin the text
+    assert(accepted >= 2, s"accepted $accepted connection(s)")
   }
 
   test("abandoning a tcp stream mid-query sends a Cancel packet") {

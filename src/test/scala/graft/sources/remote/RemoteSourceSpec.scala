@@ -49,62 +49,38 @@ class RemoteSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("query"))
   }
 
-  test("socket transport: query ships over TCP, Native response streams back") {
-    // In-process "server": accepts connections, reads the LEB128-length-
-    // prefixed query string, streams the recorded Native response, closes.
-    // Serves until closed — driver schema probe + executor partition both
-    // dial their own connection (the connection-per-partition shape).
-    val respBytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(recordedResponse()))
-    val server = new java.net.ServerSocket(0)
-    val queriesSeen = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val accepts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val acceptor = new Thread(() => {
-      try while (true) {
-        val s = server.accept()
-        accepts.incrementAndGet()
-        new Thread(() => {
-          try {
-            val in = new java.io.DataInputStream(s.getInputStream)
-            // LEB128 varuint length
-            var len = 0L; var shift = 0; var more = true
-            while (more) {
-              val b = in.readByte() & 0xff
-              len |= (b & 0x7fL) << shift; shift += 7; more = (b & 0x80) != 0
-            }
-            val q = new Array[Byte](len.toInt)
-            in.readFully(q)
-            queriesSeen.add(new String(q, "UTF-8"))
-            s.getOutputStream.write(respBytes)
-            s.getOutputStream.flush()
-          } finally s.close()
-        }).start()
-      } catch { case _: java.net.SocketException => () /* closed */ }
-    })
-    acceptor.setDaemon(true)
-    acceptor.start()
-    try {
-      val df = spark.read.format("clickhouse_remote")
-        .option("query", "SELECT * FROM nation FORMAT Native")
-        .option("transport", "socket")
-        .option("url", s"tcp://localhost:${server.getLocalPort}")
-        .load()
-      val src = spark.read.parquet(s"${SparkTestBase.sfDir}/nation.parquet")
-      assert(df.collect().toSet === src.collect().toSet)
-      assert(accepts.get() >= 2, "schema probe and executor should dial separately")
-      assert(queriesSeen.toArray.forall(_ == "SELECT * FROM nation FORMAT Native"))
-    } finally server.close()
-  }
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Seq.empty else t +: causes(t.getCause)
 
-  test("socket transport: bad url fails with a named error") {
+  test("tcp transport: bad url fails with a named error") {
     val e = intercept[Exception] {
       spark.read.format("clickhouse_remote")
-        .option("query", "SELECT 1").option("transport", "socket")
+        .option("query", "SELECT 1").option("transport", "tcp")
         .option("url", "nonsense").load()
     }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: causes(t.getCause)
     assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("host:port")))
+  }
+
+  test("an unknown transport or url scheme fails with a named error") {
+    val transport = intercept[Exception] {
+      spark.read.format("clickhouse_remote")
+        .option("query", "SELECT 1").option("transport", "socket")
+        .option("url", "tcp://127.0.0.1:1").load()
+    }
+    assert(causes(transport).exists(c =>
+      String.valueOf(c.getMessage).contains("unknown transport 'socket'")), transport.toString)
+    // the tcp client refuses any url scheme but tcp:// before dialing;
+    // the table function routes every non-file url to it
+    val schemes = Seq(
+      intercept[Exception] {
+        spark.read.format("clickhouse_remote")
+          .option("query", "SELECT 1").option("url", "socket://127.0.0.1:1").load()
+      },
+      intercept[Exception] {
+        spark.sql("SELECT * FROM clickhouse_scan('SELECT 1', 'socket://127.0.0.1:1')").collect()
+      })
+    schemes.foreach(e => assert(causes(e).exists(c =>
+      String.valueOf(c.getMessage).contains("unsupported url scheme")), e.toString))
   }
 
   test("tcp transport is the default and fails fast on an unreachable server") {
@@ -118,8 +94,6 @@ class RemoteSourceSpec extends AnyFunSuite {
         .option("url", "tcp://127.0.0.1:1")
         .option("timeoutMs", "2000").load().collect()
     }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: causes(t.getCause)
     assert(causes(e).exists(_.isInstanceOf[java.net.ConnectException]), e.toString)
   }
 }
