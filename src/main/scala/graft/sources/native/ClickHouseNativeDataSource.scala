@@ -450,27 +450,33 @@ private[native] class NativeCountScan(paths: Seq[String], conf: SerializableHado
   override def toBatch: Batch = this
   override def description(): String = s"clickhouse_native count(*) ${paths.mkString(",")}"
 
+  /** The scan's one file listing, taken on first use (as [[NativeScan]]'s). */
+  private lazy val files: Seq[FileStatus] = NativeIO.resolveFileStatuses(paths, conf.value)
+
   override def planInputPartitions(): Array[InputPartition] =
-    NativeIO.resolveFiles(paths, conf.value).map(p => NativeInputPartition(p.toString): InputPartition).toArray
+    files.map(st => NativeCountPartition(st.getPath.toString, st.getLen): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new NativeCountReaderFactory(conf)
 }
 
+/** One file of a count(*) scan, with its length from the listing. */
+private[native] case class NativeCountPartition(file: String, length: Long) extends InputPartition
+
 private[native] class NativeCountReaderFactory(conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val file = partition.asInstanceOf[NativeInputPartition].file
+      private val part = partition.asInstanceOf[NativeCountPartition]
       private var emitted = false
       private var count = 0L
       override def next(): Boolean = {
         if (emitted) return false
-        val path = new Path(file)
+        val path = new Path(part.file)
         val fs = path.getFileSystem(conf.value)
         // Indexed file: the row count is in the sidecar — a count(*)
         // over an indexed directory never opens a data file at all.
-        count = NativeIndex.read(fs, path, fs.getFileStatus(path).getLen) match {
+        count = NativeIndex.read(fs, path, part.length) match {
           case Some(entries) => entries.map(_.rows).sum
           case None => NativeIO.walkRowCount(path, conf.value)._1
         }
@@ -484,7 +490,7 @@ private[native] class NativeCountReaderFactory(conf: SerializableHadoopConf)
 
 private[native] class NativeScan(fullSchema: StructType, required: StructType,
     paths: Seq[String], limit: Int, conf: SerializableHadoopConf,
-    zoneFilters: Array[Filter] = Array.empty,
+    private[native] val zoneFilters: Array[Filter] = Array.empty,
     bucket: Option[(String, Int)] = None)
     extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
     with SupportsReportPartitioning {
@@ -497,8 +503,11 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
    * partition plan (including the re-plan after a runtime filter) read
    * it, so they always describe the same files; a file that lands after
    * the listing is seen by the next query, not half-seen by this one.
+   * Each part parses its sidecar at most once, for all of them.
    */
-  private lazy val files: Seq[FileStatus] = NativeIO.resolveFileStatuses(paths, conf.value)
+  private[native] lazy val parts: Seq[NativePart] =
+    NativeIO.resolveFileStatuses(paths, conf.value).map(new NativePart(_, conf.value))
+  private def files: Seq[FileStatus] = parts.map(_.status)
 
   /**
    * Bucketed catalog tables report KeyGroupedPartitioning over
@@ -576,10 +585,7 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
     // file has one (a partial sum would mislead the CBO low).
     private lazy val totalRows: OptionalLong =
       try {
-        val counts = files.map { st =>
-          NativeIndex.read(st.getPath.getFileSystem(conf.value), st.getPath, st.getLen)
-            .map(_.map(_.rows).sum)
-        }
+        val counts = parts.map(_.index.map(_._1.map(_.rows).sum))
         if (counts.nonEmpty && counts.forall(_.isDefined))
           OptionalLong.of(counts.flatten.sum)
         else OptionalLong.empty()
@@ -608,14 +614,17 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
    * tested first and blocks (or entire files) that cannot match plan
    * NO work — on data sorted by the filter column a point/range query
    * reads O(matching blocks). Pruning is advisory: every filter is
-   * also a residual Spark re-evaluates per row.
+   * also a residual Spark re-evaluates per row. This is the one place
+   * that decides which parts and blocks a predicate can touch: the
+   * table-maintenance passes ([[NativeTableOps]]) ask it too.
    */
   override def planInputPartitions(): Array[InputPartition] = {
     val target = SparkSession.getActiveSession
       .map(FilePartition.maxSplitBytes(_, Seq(PartitionDirectory(InternalRow.empty, files.toArray))))
       .getOrElse(128L * 1024 * 1024)
     val pruning = effectiveFilters
-    files.flatMap { st =>
+    parts.flatMap { part =>
+      val st = part.status
       val p = st.getPath
       // -1 when untagged; a bucketed layout is only claimed when every
       // listed file carries a tag, and partitions come from the same list
@@ -623,7 +632,7 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
       // small files skip the sidecar RPC unless filters could prune them
       if (st.getLen <= target && pruning.isEmpty)
         Seq(NativeInputPartition(p.toString, bucketId = bucketId))
-      else NativeIndex.readWithMeta(p.getFileSystem(conf.value), p, st.getLen) match {
+      else part.index match {
         case Some((entries, meta)) =>
           // writer-declared compression rides the partition so executor
           // readers never sniff files this writer produced
@@ -659,6 +668,14 @@ private[native] case class NativeInputPartition(file: String, start: Long = 0L,
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucketId))
+}
+
+/** One listed data file of a [[NativeScan]]; its validated sidecar
+  * (block entries and writer meta, None when absent or invalid) is
+  * read on first use and then kept. */
+private[native] final class NativePart(val status: FileStatus, conf: Configuration) {
+  lazy val index: Option[(Array[NativeIndex.BlockEntry], Map[String, String])] =
+    NativeIndex.readWithMeta(status.getPath.getFileSystem(conf), status.getPath, status.getLen)
 }
 
 private[native] class NativeReaderFactory(required: StructType, limit: Int,

@@ -136,31 +136,38 @@ object NativeBlockReader {
       case Some(nColsL) =>
         val nRowsL = in.readVarUInt()
         checkShape(nColsL, nRowsL)
-        val nCols = nColsL.toInt
-        val nRows = nRowsL.toInt
-        val out = Seq.newBuilder[(String, ChType)]
-        var c = 0
-        while (c < nCols) {
-          val name = in.readString()
-          val t = ChType.parse(in.readString())
-          out += (name -> t)
-          if (c < nCols - 1) {
-            try ColumnCodec.skip(in, t, nRows)
-            catch {
-              case e: UnsupportedColumnException =>
-                // A non-final column of unknowable byte width makes the
-                // remaining headers unreachable — fail with the column
-                // named instead of a bare type error (the reference
-                // instead silently misparses, src/lib.rs:168-170).
-                throw new java.io.IOException(
-                  s"schema inference: cannot skip column '$name' of " +
-                    s"unsupported type ${e.typeName}; remaining columns unreadable", e)
-            }
-          }
-          c += 1
-        }
-        out.result()
+        readColumnHeaders(in, nColsL.toInt, nRowsL.toInt)
     }
+  }
+
+  /**
+   * The (name, type) headers of a block's `nCols` columns, after its
+   * `n_columns, n_rows` header: each non-final column's values are
+   * skipped, never decoded, so nothing is sized from `nRows`.
+   */
+  def readColumnHeaders(in: Input, nCols: Int, nRows: Int): Seq[(String, ChType)] = {
+    val out = Seq.newBuilder[(String, ChType)]
+    var c = 0
+    while (c < nCols) {
+      val name = in.readString()
+      val t = ChType.parse(in.readString())
+      out += (name -> t)
+      if (c < nCols - 1) {
+        try ColumnCodec.skip(in, t, nRows)
+        catch {
+          case e: UnsupportedColumnException =>
+            // A non-final column of unknowable byte width makes the
+            // remaining headers unreachable — fail with the column
+            // named instead of a bare type error (the reference
+            // instead silently misparses, src/lib.rs:168-170).
+            throw new java.io.IOException(
+              s"schema inference: cannot skip column '$name' of " +
+                s"unsupported type ${e.typeName}; remaining columns unreadable", e)
+        }
+      }
+      c += 1
+    }
+    out.result()
   }
 }
 

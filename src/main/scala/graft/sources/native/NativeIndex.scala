@@ -301,19 +301,13 @@ private[native] object NativeIndex {
   }
 
   /**
-   * Pack an indexed file's blocks into contiguous ranges of ~
-   * `targetBytes` each (always >= 1 block per range) — returns
-   * (startOffset, blockCount, rowCount) triples in file order.
-   */
-  def splitRanges(entries: Array[BlockEntry], dataLen: Long, targetBytes: Long)
-      : Seq[(Long, Int, Long)] =
-    splitRangesKeeping(entries, dataLen, targetBytes, _ => true)
-
-  /**
-   * Same, but only over blocks `keep` selects (zone-map pruning):
-   * skipped blocks break ranges, so every emitted range is a
-   * contiguous run of kept blocks a reader can stream without
-   * re-seeking. May return Nil — a fully pruned file plans NO work.
+   * Pack the blocks `keep` selects (zone-map pruning) of an indexed
+   * file into contiguous ranges of ~`targetBytes` each (always >= 1
+   * block per range) — returns (startOffset, blockCount, rowCount)
+   * triples in file order. Skipped blocks break ranges, so every
+   * emitted range is a contiguous run of kept blocks a reader can
+   * stream without re-seeking. May return Nil — a fully pruned file
+   * plans NO work.
    */
   def splitRangesKeeping(entries: Array[BlockEntry], dataLen: Long, targetBytes: Long,
       keep: Int => Boolean): Seq[(Long, Int, Long)] = {

@@ -3,7 +3,7 @@ package graft.sources.remote
 import java.io.{BufferedInputStream, BufferedOutputStream, IOException}
 import java.net.{InetSocketAddress, Socket}
 
-import graft.sources.native.{ColumnarDecoder, NativeBlock}
+import graft.sources.native.{ChType, ColumnarDecoder, NativeBlock}
 import graft.sources.native.NativeCodec.{Input, Output}
 
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -45,61 +45,69 @@ final class ChTcpClient private (sock: Socket, rawIn: java.io.InputStream,
    * uncompressed, per the protocol.
    */
   def execute(query: String, projection: Option[Set[String]],
-      compress: Boolean = false): RemoteBlockSource = {
-    val negotiated = hello.negotiated
-    writeQuery(out, query, negotiated, compress)
+      compress: Boolean = false): ResultStream = {
+    writeQuery(out, query, hello.negotiated, compress)
     out.flush()
-    new RemoteBlockSource {
-      private var done = false
-      /** The block body of the packet just read: inside a per-block
-        * frame window when compressed (NOT closed — that would close the
-        * socket; the block decode drains it exactly). */
-      private def body[T](decode: Input => T): T = {
-        in.readString() // temporary-table name
-        if (compress) decode(new Input(new graft.sources.native.FrameInputStream(rawIn)))
-        else decode(in)
-      }
-      /** Packets up to the next Data block, decoded by `decode`. */
-      private def nextData[T](decode: Input => T): Option[T] = {
-        if (done) return None
-        while (true) {
-          in.readVarUInt() match {
-            case ServerPacket.Data =>
-              return Some(body(decode))
-            case ServerPacket.Progress => readProgress(in, negotiated)
-            case ServerPacket.ProfileInfo => readProfileInfo(in)
-            case ServerPacket.Totals | ServerPacket.Extremes =>
-              body(readBlockBody(_, negotiated, Some(Set.empty))) // consume, skip-decode
-            case ServerPacket.Log =>
-              readBlock(in, negotiated, Some(Set.empty)) // never compressed
-            case ServerPacket.Exception => throw readException(in)
-            case ServerPacket.EndOfStream =>
-              done = true
-              return None
-            case other => throw new IOException(
-              s"clickhouse tcp: unexpected server packet $other mid-query")
-          }
+    new ResultStream(projection, compress)
+  }
+
+  /** The server packet stream of one query sent by [[execute]]. */
+  final class ResultStream private[ChTcpClient] (projection: Option[Set[String]],
+      compress: Boolean) extends RemoteBlockSource {
+    private val negotiated = hello.negotiated
+    private var done = false
+    /** The block body of the packet just read: inside a per-block
+      * frame window when compressed (NOT closed — that would close the
+      * socket; the block decode drains it exactly). */
+    private def body[T](decode: Input => T): T = {
+      in.readString() // temporary-table name
+      if (compress) decode(new Input(new graft.sources.native.FrameInputStream(rawIn)))
+      else decode(in)
+    }
+    /** Packets up to the next Data block, decoded by `decode`. */
+    private def nextData[T](decode: Input => T): Option[T] = {
+      if (done) return None
+      while (true) {
+        in.readVarUInt() match {
+          case ServerPacket.Data =>
+            return Some(body(decode))
+          case ServerPacket.Progress => readProgress(in, negotiated)
+          case ServerPacket.ProfileInfo => readProfileInfo(in)
+          case ServerPacket.Totals | ServerPacket.Extremes =>
+            body(readBlockBody(_, negotiated, Some(Set.empty))) // consume, skip-decode
+          case ServerPacket.Log =>
+            readBlock(in, negotiated, Some(Set.empty)) // never compressed
+          case ServerPacket.Exception => throw readException(in)
+          case ServerPacket.EndOfStream =>
+            done = true
+            return None
+          case other => throw new IOException(
+            s"clickhouse tcp: unexpected server packet $other mid-query")
         }
-        None // unreachable
       }
-      override def nextBlock(): Option[NativeBlock] =
-        nextData(readBlockBody(_, negotiated, projection))
-      override def nextBatch(decoder: ColumnarDecoder): ColumnarBatch =
-        nextData(readBatchBody(_, negotiated, decoder)).orNull
-      override def close(): Unit = {
-        // Abandoning mid-stream (driver schema probe after the header
-        // block, a pushed LIMIT, a killed task): tell the server to
-        // stop computing instead of letting the query run until it
-        // notices the dead socket. Best-effort — the socket may
-        // already be broken, and close proceeds regardless.
-        if (!done) {
-          try {
-            out.writeVarUInt(ClientPacket.Cancel)
-            out.flush()
-          } catch { case _: IOException => () }
-        }
-        ChTcpClient.this.close()
+      None // unreachable
+    }
+    override def nextBlock(): Option[NativeBlock] =
+      nextData(readBlockBody(_, negotiated, projection))
+    override def nextBatch(decoder: ColumnarDecoder): ColumnarBatch =
+      nextData(readBatchBody(_, negotiated, decoder)).orNull
+    /** The next Data block's column (name, type) headers, its values
+      * skipped, never decoded — the schema probe's read. */
+    def nextHeader(): Option[Seq[(String, ChType)]] =
+      nextData(readHeaderBody(_, negotiated))
+    override def close(): Unit = {
+      // Abandoning mid-stream (driver schema probe after the header
+      // block, a pushed LIMIT, a killed task): tell the server to
+      // stop computing instead of letting the query run until it
+      // notices the dead socket. Best-effort — the socket may
+      // already be broken, and close proceeds regardless.
+      if (!done) {
+        try {
+          out.writeVarUInt(ClientPacket.Cancel)
+          out.flush()
+        } catch { case _: IOException => () }
       }
+      ChTcpClient.this.close()
     }
   }
 

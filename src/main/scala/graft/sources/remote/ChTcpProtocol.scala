@@ -2,7 +2,7 @@ package graft.sources.remote
 
 import java.io.IOException
 
-import graft.sources.native.{ColumnarDecoder, ColumnCodec, NativeBlock, NativeBlockReader}
+import graft.sources.native.{ChType, ColumnarDecoder, ColumnCodec, NativeBlock, NativeBlockReader}
 import graft.sources.native.NativeCodec.{Input, Output}
 
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -238,6 +238,14 @@ object ChTcpProtocol {
   def readBlockBody(in: Input, negotiated: Long, projection: Option[Set[String]]): NativeBlock = {
     val (nCols, nRows) = readBlockShape(in, negotiated)
     ColumnCodec.decodeColumns(in, nCols, nRows, projection)
+  }
+
+  /** A block body's column (name, type) headers, values skipped and
+    * never decoded: the schema probe's read, bounded in memory whatever
+    * row count the header declares. */
+  def readHeaderBody(in: Input, negotiated: Long): Seq[(String, ChType)] = {
+    val (nCols, nRows) = readBlockShape(in, negotiated)
+    NativeBlockReader.readColumnHeaders(in, nCols, nRows)
   }
 
   /** [[readBlockBody]] decoded straight into `decoder`'s column vectors. */

@@ -117,10 +117,7 @@ final case class TransportSpec(
    * protocol packets, so the seam is block-level.
    */
   def openSource(): RemoteBlockSource = transport match {
-    case "tcp" =>
-      val (host, port) = hostPort
-      ChTcpClient.connect(host, port, user, password, database, timeoutMs, tls)
-        .execute(query, None, compress = compression)
+    case "tcp" => openTcp()
     case _ =>
       val reader = new NativeBlockReader(openResponse())
       new RemoteBlockSource {
@@ -131,19 +128,27 @@ final case class TransportSpec(
       }
   }
 
-  /** Bind-time schema: first block's per-column (name, type) headers.
-    * On tcp the server sends the rowless header block before result
-    * rows, so the probe reads one packet and then CANCELS the query
-    * (the source's close sends ClientPacket.Cancel when abandoning
-    * mid-stream) — the server stops computing instead of running the
-    * probe to completion against a dead connection. */
+  private def openTcp(): ChTcpClient#ResultStream = {
+    val (host, port) = hostPort
+    ChTcpClient.connect(host, port, user, password, database, timeoutMs, tls)
+      .execute(query, None, compress = compression)
+  }
+
+  /** Bind-time schema: first block's per-column (name, type) headers,
+    * values skipped and never decoded, so a hostile row count sizes
+    * nothing. On tcp the server sends the rowless header block before
+    * result rows, so the probe reads one packet and then CANCELS the
+    * query (the source's close sends ClientPacket.Cancel when
+    * abandoning mid-stream) — the server stops computing instead of
+    * running the probe to completion against a dead connection. */
   def header(): Seq[(String, ChType)] = transport match {
     case "tcp" =>
-      // the server's first Data packet is a rowless header block
-      val src = openSource()
-      try src.nextBlock().map(_.columns.map(c => c.name -> c.chType).toSeq)
-        .getOrElse(Seq.empty)
-      finally src.close()
+      val src = openTcp()
+      try src.nextHeader().getOrElse(Seq.empty)
+      catch {
+        case e: java.io.IOException => throw new java.io.IOException(
+          s"clickhouse_remote: schema probe of $url failed: ${e.getMessage}", e)
+      } finally src.close()
     case _ =>
       val stream = openResponse()
       try NativeBlockReader.readHeader(stream) finally stream.close()

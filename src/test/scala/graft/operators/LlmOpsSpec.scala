@@ -1105,13 +1105,23 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(zs === global(signedZeros, 8))
     assert(zs.toSeq.groupBy(_._1).map { case (s, c) => s -> c.size } ===
       Map(0 -> 2, 1 -> 1, 2 -> 1, 3 -> 2), zs)
-    // (b) the codebook plan carries no window, no dedup aggregate on
-    // the subvector stream — just the bounded object aggregate
-    val plan = Similarity.pqCodebookSampled(emb, m, dim, ksub, seed)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"unexpected window in:\n$plan")
-    assert(plan.contains("ObjectHashAggregate"), s"expected object agg in:\n$plan")
-    assert(!plan.toLowerCase.contains("sort"), s"unexpected sort in:\n$plan")
+    // (b) the codebook plan carries no window, no sort and no sort
+    // aggregate on the subvector stream — just the bounded object
+    // aggregate. AQE off: the static plan holds every exchange and sort
+    // the planner inserts.
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    val plan = SparkTestBase.withAqeDisabled(
+      Similarity.pqCodebookSampled(emb, m, dim, ksub, seed).queryExecution.executedPlan)
+    val nodes = SparkTestBase.walkPlan(plan)
+    assert(nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]), s"expected object agg in:\n$plan")
+    assert(!nodes.exists {
+      case _: WindowExec | _: WindowGroupLimitExec | _: SortExec | _: SortAggregateExec |
+          _: SortMergeJoinExec => true
+      case _ => false
+    }, s"unexpected window or sort in:\n$plan")
   }
 
   test("KMeans PQ codebook plugs into the codebook seam and holds recall") {

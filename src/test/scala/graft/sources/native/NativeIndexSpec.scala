@@ -94,11 +94,12 @@ class NativeIndexSpec extends AnyFunSuite {
     val df = spark.read.format("clickhouse_native").load(dir)
     assert(df.count() === 100000L)
     // estimateStatistics: exact row count via sidecars
-    val scan = new NativeScan(df.schema, df.schema, Seq(dir), -1,
+    def scan = new NativeScan(df.schema, df.schema, Seq(dir), -1,
       new SerializableHadoopConf(hadoopConf))
     val stats = scan.estimateStatistics()
     assert(stats.numRows().isPresent && stats.numRows().getAsLong === 100000L)
-    // delete the sidecar → numRows unknown, count still correct (header walk)
+    // delete the sidecar → a new scan's numRows is unknown (a scan keeps
+    // the sidecars it has read), count still correct (header walk)
     fs.delete(NativeIndex.sidecarPath(part), false)
     val stats2 = scan.estimateStatistics()
     assert(!stats2.numRows().isPresent)
@@ -280,12 +281,14 @@ class NativeIndexSpec extends AnyFunSuite {
     val entries = Array(
       NativeIndex.BlockEntry(0, 10), NativeIndex.BlockEntry(100, 10),
       NativeIndex.BlockEntry(200, 10), NativeIndex.BlockEntry(300, 10))
-    val ranges = NativeIndex.splitRanges(entries, dataLen = 400, targetBytes = 200)
+    def splitRanges(dataLen: Long, targetBytes: Long) =
+      NativeIndex.splitRangesKeeping(entries, dataLen, targetBytes, _ => true)
+    val ranges = splitRanges(dataLen = 400, targetBytes = 200)
     assert(ranges === Seq((0L, 2, 20L), (200L, 2, 20L)))
     // target smaller than a block: one block per range, never zero
-    val tiny = NativeIndex.splitRanges(entries, 400, 10)
+    val tiny = splitRanges(400, 10)
     assert(tiny === Seq((0L, 1, 10L), (100L, 1, 10L), (200L, 1, 10L), (300L, 1, 10L)))
     // huge target: single range
-    assert(NativeIndex.splitRanges(entries, 400, 1 << 20) === Seq((0L, 4, 40L)))
+    assert(splitRanges(400, 1 << 20) === Seq((0L, 4, 40L)))
   }
 }

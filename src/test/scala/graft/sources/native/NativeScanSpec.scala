@@ -131,6 +131,36 @@ class NativeScanSpec extends AnyFunSuite {
       assert(buckets === Seq(0, 1))
     }
     assert(keyed === 1)
+    // a count(*) scan lists once too, and its partitions carry the length
+    CountGlobFileSystem.calls.set(0)
+    val count = new NativeCountScan(Seq(s"countglob://$dir"), new SerializableHadoopConf(conf))
+    val counted = count.planInputPartitions().toSeq
+    assert(count.planInputPartitions().toSeq === counted)
+    assert(CountGlobFileSystem.calls.get === 1)
+    assert(counted.map(_.asInstanceOf[NativeCountPartition].length) === Seq(part.length()))
+  }
+
+  test("a scan reads each sidecar once: statistics, both plans and the runtime re-plan share it") {
+    import org.apache.spark.sql.sources.{Filter, GreaterThan, LessThan}
+    import spark.implicits._
+    val dir = tmpDir("sidecaronce")
+    (1 to 4000).map(i => (i.toLong, s"name_$i", i * 0.5)).toDF("id", "name", "v")
+      .repartitionByRange(4, $"id").write.format("clickhouse_native").mode("overwrite").save(dir)
+    val conf = hadoopConf
+    conf.set("fs.countglob.impl", classOf[CountGlobFileSystem].getName)
+    conf.setBoolean("fs.countglob.impl.disable.cache", true)
+    CountGlobFileSystem.sidecarOpens.clear()
+    val scan = new NativeScan(schema, schema, Seq(s"countglob://$dir"), -1,
+      new SerializableHadoopConf(conf), zoneFilters = Array[Filter](LessThan("id", 2000L)))
+    assert(scan.estimateStatistics().numRows().getAsLong === 4000L)
+    def files = scan.planInputPartitions().map(_.asInstanceOf[NativeInputPartition].file).toSet
+    val first = files
+    assert(first.nonEmpty && files === first)
+    scan.filter(Array[Filter](GreaterThan("id", 3000L))) // with id < 2000: nothing
+    assert(files.isEmpty)
+    val opens = CountGlobFileSystem.sidecarOpens
+    assert(opens.size === 4, opens)
+    assert(opens.values.stream.allMatch(_ == 1), opens)
   }
 
   test("bucketed tables keep their bucketId on every split") {
@@ -326,15 +356,21 @@ class NativeScanSpec extends AnyFunSuite {
   }
 }
 
-/** Local file system that counts `globStatus` calls (scheme `countglob`). */
+/** Local file system (scheme `countglob`) that counts `globStatus`
+  * calls and the opens of each sidecar (by file name). */
 class CountGlobFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("countglob:///")
   override def globStatus(pattern: Path): Array[org.apache.hadoop.fs.FileStatus] = {
     CountGlobFileSystem.calls.incrementAndGet()
     super.globStatus(pattern)
   }
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".chidx")) CountGlobFileSystem.sidecarOpens.merge(f.getName, 1, _ + _)
+    super.open(f, bufferSize)
+  }
 }
 
 object CountGlobFileSystem {
   val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  val sidecarOpens = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 }

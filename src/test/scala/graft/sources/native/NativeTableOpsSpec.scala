@@ -64,6 +64,31 @@ class NativeTableOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("delete with an IN list of 20 literals (Spark's InSet) rewrites only the parts holding them") {
+    import spark.implicits._
+    val src = tmp("mut-inset-src")
+    val dst = tmp("mut-inset-dst")
+    (0 until 1000).map(i => (i.toLong, s"name_$i", i % 7)).toDF("id", "name", "grp")
+      .repartitionByRange(8, col("id"))
+      .write.format("clickhouse_native").option("sortBy", "id").mode("overwrite").save(src)
+    assert(partFiles(src).length === 8)
+    // more than 10 literals: the optimizer rewrites the IN list to InSet
+    val ids = (0L until 10L) ++ (500L until 510L)
+    val hit = col("id").isin(ids: _*)
+    val out = NativeTableOps.mutateDelete(spark, src, dst, hit)
+    assert(out.count() === 980)
+    val (holders, others) = partFiles(src).partition(f =>
+      spark.read.format("clickhouse_native").load(f.getPath).filter(hit).count() > 0)
+    assert(holders.nonEmpty && holders.length <= 3, holders.map(_.getName).toSeq)
+    holders.foreach(f => assert(!new java.io.File(dst, f.getName).exists(), s"${f.getName} copied"))
+    others.foreach { f =>
+      val copy = new java.io.File(dst, f.getName)
+      assert(copy.exists(), s"untouched part ${f.getName} was rewritten")
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.file.Files.readAllBytes(copy.toPath)), s"${f.getName} not byte-identical")
+    }
+  }
+
   test("update mutation: assignments and predicate see the ORIGINAL row") {
     val src = tmp("mut-upd-src")
     val dst = tmp("mut-upd-dst")

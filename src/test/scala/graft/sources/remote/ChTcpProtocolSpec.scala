@@ -444,6 +444,32 @@ class ChTcpProtocolSpec extends AnyFunSuite {
     }
   }
 
+  test("the tcp schema probe sizes nothing from a hostile header row count") {
+    // a first Data block declaring MaxBlockRows rows of two UInt64
+    // columns, then the stream ends: decoding the first column would
+    // size a 100M-slot array before reading any value
+    val rows = new ByteArrayOutputStream()
+    val out = new Output(rows)
+    out.writeVarUInt(graft.sources.native.NativeBlockReader.MaxBlockRows)
+    out.flush()
+    val hostile = hex(s"01 00 $blockInfo 02") ++ rows.toByteArray ++
+      hex(s"${str("a")} ${str("UInt64")}")
+    spark // session start-up allocates on this thread: not the probe's
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    withScriptedServer(clientHelloGolden, serverHelloModern,
+      queryGoldenModern, hostile) { port =>
+      val options = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("transport", "tcp", "url", s"tcp://127.0.0.1:$port", "query", "SELECT 1"))
+      val before = threads.getThreadAllocatedBytes(tid)
+      val e = intercept[java.io.IOException](new ClickHouseRemoteDataSource().inferSchema(options))
+      val allocated = threads.getThreadAllocatedBytes(tid) - before
+      assert(allocated < (64L << 20), s"schema probe allocated $allocated bytes")
+      assert(e.getMessage.contains(s"schema probe of tcp://127.0.0.1:$port failed"), e.getMessage)
+    }
+  }
+
   test("transport=tcp surfaces a server exception with code and message") {
     withScriptedServer(clientHelloGolden, serverHelloModern,
       queryGoldenModern, exceptionPacket) { port =>
