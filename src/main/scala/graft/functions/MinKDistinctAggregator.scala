@@ -26,7 +26,8 @@ import org.apache.spark.sql.types._
  * dedup-stable, so partial/merge order cannot change the result.
  *
  * Equivalence contract (pinned in LlmOpsSpec against the single
- * global-rank spelling): the comparator below replicates Spark's SQL
+ * global-rank spelling, and in MinKDistinctAggSpec on -0.0/0.0/NaN
+ * centroids): the comparator below replicates Spark's SQL
  * ordering and grouping semantics for `array<float>` — elementwise,
  * ties broken by length, with `-0.0 == 0.0` (primitive `==` short
  * circuit) and `NaN == NaN`, NaN largest (`Float.compare` fallback) —
@@ -93,9 +94,27 @@ case class MinKDistinctAgg(
       // (array comparison only breaks hk ties)
       val hv = h.asInstanceOf[java.lang.Long].longValue()
       if (set.size < k || hv <= set.last()._1)
-        offer(set, (hv, arr.toFloatArray()))
+        offer(set, (hv, floats(arr)))
     }
     set
+  }
+
+  @transient private lazy val elementsNullable =
+    centroid.dataType.asInstanceOf[ArrayType].containsNull
+
+  /** The centroid's elements. `toFloatArray` would read a null element
+    * as 0.0, so a null fails by name instead — a type that only
+    * declares nullable elements is fine. */
+  private def floats(arr: org.apache.spark.sql.catalyst.util.ArrayData): Array[Float] = {
+    if (elementsNullable) {
+      var i = 0
+      while (i < arr.numElements()) {
+        if (arr.isNullAt(i)) throw new IllegalArgumentException(
+          s"min_k_distinct: centroid element $i is null; centroids must hold no null element")
+        i += 1
+      }
+    }
+    arr.toFloatArray()
   }
 
   override def merge(a: java.util.TreeSet[(Long, Array[Float])],

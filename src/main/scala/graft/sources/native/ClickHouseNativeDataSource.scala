@@ -34,7 +34,10 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
  * Differences from the reference, by design (SURVEY §3.1/§4.2):
  *  - schema inference reads only the first block's headers, not the
  *    whole file twice (ref binds AND inits with full parses,
- *    src/lib.rs:251, :271-274);
+ *    src/lib.rs:251, :271-274), and the part snapshot it lists (each
+ *    sidecar it parsed included) serves the bound table's first scan:
+ *    one listing per query, as Spark's own file index lists once at
+ *    bind;
  *  - data streams block-by-block in executors — nothing is ever
  *    materialized on the driver;
  *  - a directory/glob of native files scans in parallel across
@@ -55,14 +58,18 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
+  /** The paths [[inferSchema]] bound and the part snapshot it listed,
+    * until the [[getTable]] call of the same bind takes them. */
+  @volatile private var bound: Option[(Seq[String], Seq[NativePart])] = None
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val conf = NativeIO.sessionHadoopConf()
     val paths = NativeIO.paths(options)
-    val files = NativeIO.resolveFileStatuses(paths, conf)
+    val files = NativeIO.snapshot(paths, NativeIO.sessionHadoopConf())
     if (files.isEmpty)
       // A typo'd path must fail loudly, not scan as 0 rows.
       throw new IllegalArgumentException(
         s"clickhouse_native: no files found for path(s): ${paths.mkString(", ")}")
+    bound = Some(paths -> files)
     if (options.getBoolean("mergeSchema", false)) {
       // Schema evolution: the UNION of every readable file header, in
       // first-seen column order — the layout a long-lived table has
@@ -75,8 +82,9 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
       // fail loudly: silent coercion would decode garbage.
       // Cost: one driver-side header read per file (the first block
       // header only, not data) — O(files) at bind time, the same
-      // contract parquet's mergeSchema accepts.
-      val headers = files.map(st => st.getPath -> NativeIO.header(st, conf))
+      // contract parquet's mergeSchema accepts. The sidecars it parses
+      // for their declared compression serve the first scan's plan.
+      val headers = files.map(f => f.status.getPath -> f.header)
         .filter(_._2.nonEmpty)
       if (headers.isEmpty)
         throw new IllegalArgumentException(
@@ -141,7 +149,7 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
     } else {
       // First file with a readable header wins (tolerates empty files
       // from other writers; our own writer no longer produces them).
-      val header = files.iterator.map(NativeIO.header(_, conf))
+      val header = files.iterator.map(_.header)
         .find(_.nonEmpty).getOrElse(
           // all files headerless → fail loudly, same policy as no-files
           throw new IllegalArgumentException(
@@ -153,9 +161,16 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
     }
   }
 
+  /** The table of one bind. After [[inferSchema]] the table carries
+    * that listing for its first scan; with a user-given schema its
+    * scans list for themselves. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new NativeTable(schema, NativeIO.paths(new CaseInsensitiveStringMap(properties)))
+      properties: util.Map[String, String]): Table = {
+    val paths = NativeIO.paths(new CaseInsensitiveStringMap(properties))
+    val listed = bound.collect { case (p, parts) if p == paths => parts }
+    bound = None
+    new NativeTable(schema, paths, listed = listed)
+  }
 }
 
 private[sources] object NativeIO {
@@ -179,12 +194,13 @@ private[sources] object NativeIO {
     (multi ++ single).distinct
   }
 
-  /** Expand dirs and globs into concrete .clickhouse/.native data files. */
-  def resolveFiles(paths: Seq[String], conf: Configuration): Seq[Path] =
-    resolveFileStatuses(paths, conf).map(_.getPath)
-
-  /** Same, keeping the FileStatus (length) from the single listing RPC. */
-  def resolveFileStatuses(paths: Seq[String], conf: Configuration): Seq[org.apache.hadoop.fs.FileStatus] = {
+  /**
+   * One listing of `paths` — dirs and globs expanded to their data
+   * files, name-sorted — as a part snapshot: the only way native code
+   * lists a table. Each part reads its sidecar and header on first
+   * use, so everything planned from one snapshot probes a part once.
+   */
+  def snapshot(paths: Seq[String], conf: Configuration): Seq[NativePart] =
     paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
@@ -195,23 +211,7 @@ private[sources] object NativeIO {
             .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
         else Seq(st)
       }
-    }.sortBy(_.getPath.toString)
-  }
-
-  /**
-   * The first block's (name, type) headers of one data file, read
-   * without touching data. The validated sidecar's writer-declared
-   * compression rides into the probe — the same authority the
-   * partition readers use — so files this writer produced are never
-   * sniffed; an unreadable sidecar means sniff.
-   */
-  def header(st: FileStatus, conf: Configuration): Seq[(String, ChType)] = {
-    val p = st.getPath
-    val fs = p.getFileSystem(conf)
-    val in = NativeCompression.maybeWrapRead(fs.open(p), conf,
-      NativeIndex.declaredCompression(fs, p, st.getLen))
-    try NativeBlockReader.readHeader(in) finally in.close()
-  }
+    }.sortBy(_.getPath.toString).map(new NativePart(_, conf))
 
   /** (rows, blocks) of one data file from a walk over its block
     * headers — no value is decoded. A corrupt or truncated file fails
@@ -236,10 +236,18 @@ private[sources] object NativeIO {
     }
 }
 
+/**
+ * A native table of one bind. `listed` is the part snapshot that bind
+ * took (schema inference), if any. The first scan of the table that
+ * lists takes it instead of listing again; every later scan lists for
+ * itself, so a query run after an append sees the new part.
+ */
 private[native] class NativeTable(tableSchema: StructType, paths: Seq[String],
     bucket: Option[(String, Int)] = None, tableProps: Map[String, String] = Map.empty,
-    displayName: Option[String] = None)
+    displayName: Option[String] = None, private[native] val listed: Option[Seq[NativePart]] = None)
     extends Table with SupportsRead with SupportsWrite {
+  private val unclaimed = new java.util.concurrent.atomic.AtomicReference(listed)
+
   override def name(): String =
     displayName.getOrElse(s"clickhouse_native(${paths.mkString(",")})")
   override def schema(): StructType = tableSchema
@@ -261,7 +269,7 @@ private[native] class NativeTable(tableSchema: StructType, paths: Seq[String],
       TableCapability.TRUNCATE).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NativeScanBuilder(tableSchema, paths, bucket)
+    new NativeScanBuilder(tableSchema, paths, bucket, () => unclaimed.getAndSet(None))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new NativeWriteBuilder(NativeWriteOptions.parse(info.schema(),
@@ -273,7 +281,7 @@ private[native] class NativeTable(tableSchema: StructType, paths: Seq[String],
 }
 
 private[native] class NativeScanBuilder(fullSchema: StructType, paths: Seq[String],
-    bucket: Option[(String, Int)] = None)
+    bucket: Option[(String, Int)] = None, listed: () => Option[Seq[NativePart]] = () => None)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownAggregates with SupportsPushDownFilters {
   private var required: StructType = fullSchema
@@ -320,8 +328,8 @@ private[native] class NativeScanBuilder(fullSchema: StructType, paths: Seq[Strin
 
   override def build(): Scan = {
     val conf = new SerializableHadoopConf(NativeIO.sessionHadoopConf())
-    if (countStar) new NativeCountScan(paths, conf)
-    else new NativeScan(fullSchema, required, paths, limit, conf, prunableFilters, bucket)
+    if (countStar) new NativeCountScan(paths, conf, listed)
+    else new NativeScan(fullSchema, required, paths, limit, conf, prunableFilters, bucket, listed)
   }
 }
 
@@ -391,7 +399,7 @@ private[native] class NativeMicroBatchStream(required: StructType, paths: Seq[St
   }
 
   private def refresh(): Unit = {
-    val listed = NativeIO.resolveFiles(paths, conf.value).map(_.toString)
+    val listed = NativeIO.snapshot(paths, conf.value).map(_.status.getPath.toString)
     val fresh = listed.filterNot(known.contains)
     if (fresh.nonEmpty) {
       // one new immutable segment per discovery batch, named by the
@@ -443,15 +451,16 @@ private[native] class NativeMicroBatchStream(required: StructType, paths: Seq[St
 }
 
 /** Scan produced when count(*) was pushed: one partial count per file. */
-private[native] class NativeCountScan(paths: Seq[String], conf: SerializableHadoopConf)
-    extends Scan with Batch {
+private[native] class NativeCountScan(paths: Seq[String], conf: SerializableHadoopConf,
+    listed: () => Option[Seq[NativePart]] = () => None) extends Scan with Batch {
   override def readSchema(): StructType =
     StructType(Seq(StructField("count", LongType, nullable = false)))
   override def toBatch: Batch = this
   override def description(): String = s"clickhouse_native count(*) ${paths.mkString(",")}"
 
   /** The scan's one file listing, taken on first use (as [[NativeScan]]'s). */
-  private lazy val files: Seq[FileStatus] = NativeIO.resolveFileStatuses(paths, conf.value)
+  private lazy val files: Seq[FileStatus] =
+    listed().getOrElse(NativeIO.snapshot(paths, conf.value)).map(_.status)
 
   override def planInputPartitions(): Array[InputPartition] =
     files.map(st => NativeCountPartition(st.getPath.toString, st.getLen): InputPartition).toArray
@@ -491,7 +500,7 @@ private[native] class NativeCountReaderFactory(conf: SerializableHadoopConf)
 private[native] class NativeScan(fullSchema: StructType, required: StructType,
     paths: Seq[String], limit: Int, conf: SerializableHadoopConf,
     private[native] val zoneFilters: Array[Filter] = Array.empty,
-    bucket: Option[(String, Int)] = None)
+    bucket: Option[(String, Int)] = None, listed: () => Option[Seq[NativePart]] = () => None)
     extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
     with SupportsReportPartitioning {
   override def readSchema(): StructType = required
@@ -503,10 +512,11 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
    * partition plan (including the re-plan after a runtime filter) read
    * it, so they always describe the same files; a file that lands after
    * the listing is seen by the next query, not half-seen by this one.
-   * Each part parses its sidecar at most once, for all of them.
+   * Each part parses its sidecar at most once, for all of them. The
+   * snapshot `listed` hands over (the table's bind) replaces the listing.
    */
   private[native] lazy val parts: Seq[NativePart] =
-    NativeIO.resolveFileStatuses(paths, conf.value).map(new NativePart(_, conf.value))
+    listed().getOrElse(NativeIO.snapshot(paths, conf.value))
   private def files: Seq[FileStatus] = parts.map(_.status)
 
   /**
@@ -670,12 +680,25 @@ private[native] case class NativeInputPartition(file: String, start: Long = 0L,
     new GenericInternalRow(Array[Any](bucketId))
 }
 
-/** One listed data file of a [[NativeScan]]; its validated sidecar
-  * (block entries and writer meta, None when absent or invalid) is
+/** One listed data file of a snapshot ([[NativeIO.snapshot]]). Its
+  * validated sidecar (block entries and writer meta, None when absent
+  * or invalid) and its first block's (name, type) headers are each
   * read on first use and then kept. */
 private[native] final class NativePart(val status: FileStatus, conf: Configuration) {
+  private def fs = status.getPath.getFileSystem(conf)
+
   lazy val index: Option[(Array[NativeIndex.BlockEntry], Map[String, String])] =
-    NativeIndex.readWithMeta(status.getPath.getFileSystem(conf), status.getPath, status.getLen)
+    NativeIndex.readWithMeta(fs, status.getPath, status.getLen)
+
+  /** Read without touching data, with the compression the sidecar
+    * declares — the authority the partition readers use — so files
+    * this writer produced are never sniffed; an unreadable sidecar
+    * means sniff. A corrupt header fails naming the file. */
+  lazy val header: Seq[(String, ChType)] = NativeIO.namingFile(status.getPath.toString) {
+    val declared = try index.flatMap(_._2.get("compression")) catch { case _: IOException => None }
+    val in = NativeCompression.maybeWrapRead(fs.open(status.getPath), conf, declared)
+    try NativeBlockReader.readHeader(in) finally in.close()
+  }
 }
 
 private[native] class NativeReaderFactory(required: StructType, limit: Int,

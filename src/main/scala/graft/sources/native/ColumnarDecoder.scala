@@ -133,7 +133,7 @@ final class ColumnarDecoder(required: StructType) {
         var i = 0
         while (i < rows) {
           val len = in.readVarUInt()
-          if (len > Int.MaxValue) throw new IOException(s"string length $len too large")
+          if (len < 0 || len > Int.MaxValue) throw new IOException(s"string length $len too large")
           readBuf(in, len.toInt)
           v.reserve(i + 1)
           putUtf8(v, i, 0, len.toInt)

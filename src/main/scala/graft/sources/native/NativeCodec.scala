@@ -70,9 +70,17 @@ object NativeCodec {
       throw new java.io.IOException("VarUInt longer than 10 bytes")
     }
 
+    /** Exactly `len` bytes. The array grows only as bytes arrive, so a
+      * hostile length in a short stream fails at EOF instead of
+      * allocating ahead of the data. */
     def readBytes(len: Int): Array[Byte] = {
-      val a = new Array[Byte](len)
-      readFully(a, 0, len)
+      var a = new Array[Byte](math.min(len, 1 << 16))
+      readFully(a, 0, a.length)
+      while (a.length < len) {
+        val got = a.length
+        a = java.util.Arrays.copyOf(a, math.min(len.toLong, got * 2L).toInt)
+        readFully(a, got, a.length - got)
+      }
       a
     }
 
@@ -93,14 +101,9 @@ object NativeCodec {
     def readString(): String = {
       val len = readVarUInt()
       if (len == 0) return ""
-      if (len > Int.MaxValue) throw new java.io.IOException(s"string length $len too large")
+      if (len < 0 || len > Int.MaxValue)
+        throw new java.io.IOException(s"string length $len too large")
       sanitize(new String(readBytes(len.toInt), StandardCharsets.UTF_8))
-    }
-
-    /** Raw length-prefixed bytes (no sanitize) — for binary payloads. */
-    def readLenPrefixedBytes(): Array[Byte] = {
-      val len = readVarUInt()
-      readBytes(len.toInt)
     }
 
     /**
@@ -115,7 +118,8 @@ object NativeCodec {
     def readUtf8(): org.apache.spark.unsafe.types.UTF8String = {
       val len = readVarUInt()
       if (len == 0) return org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
-      if (len > Int.MaxValue) throw new java.io.IOException(s"string length $len too large")
+      if (len < 0 || len > Int.MaxValue)
+        throw new java.io.IOException(s"string length $len too large")
       val bytes = readBytes(len.toInt)
       var i = 0
       var ascii = true

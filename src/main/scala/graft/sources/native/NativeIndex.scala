@@ -233,12 +233,6 @@ private[native] object NativeIndex {
       dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
     }.toMap
 
-  /** The writer-declared compression of a data file of `dataLen`
-    * bytes, from its validated sidecar; None when absent or unreadable. */
-  def declaredCompression(fs: FileSystem, dataFile: Path, dataLen: Long): Option[String] =
-    try readWithMeta(fs, dataFile, dataLen).flatMap(_._2.get("compression"))
-    catch { case _: java.io.IOException => None }
-
   /** [[read]] plus the writer-authored `#meta` key/value line (empty for
     * pre-meta sidecars and CHIDX1). */
   def readWithMeta(fs: FileSystem, dataFile: Path,

@@ -1,8 +1,8 @@
 package graft.sources.native
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
 
@@ -46,9 +46,12 @@ import org.apache.spark.sql.sources.Filter
  * parts legitimately carry different schemas, and a first-header-wins
  * load during a rewrite would silently DROP the added column from the
  * parts that have it. The union schema null-fills old parts instead —
- * no data ever lost by a maintenance pass. Cost: one driver-side
- * header read per part at bind, the same O(parts) these operations
- * already pay in sidecar probes.
+ * no data ever lost by a maintenance pass.
+ *
+ * A pass lists its source once: the bind ([[bind]]) reads each part's
+ * sidecar and first block header, and that part snapshot then serves
+ * the planning, the TTL drop-tier nullability check, the codec choice
+ * and the projection manifest, so the pass parses each sidecar once.
  */
 object NativeTableOps {
 
@@ -68,9 +71,9 @@ object NativeTableOps {
    */
   def partsMeta(spark: SparkSession, dir: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    val metas = NativeIO.resolveFileStatuses(Seq(dir), conf).map { st =>
-      val p = st.getPath
-      new NativePart(st, conf).index match {
+    val metas = NativeIO.snapshot(Seq(dir), conf).map { part =>
+      val (st, p) = (part.status, part.status.getPath)
+      part.index match {
         case Some((entries, meta)) =>
           PartMeta(p.getName, st.getLen, entries.map(_.rows).sum,
             entries.length, meta.getOrElse("compression", "none"),
@@ -98,9 +101,9 @@ object NativeTableOps {
    */
   def columnsMeta(spark: SparkSession, dir: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    val metas = NativeIO.resolveFileStatuses(Seq(dir), conf).flatMap { st =>
-      NativeIO.header(st, conf).zipWithIndex.map { case ((name, t), i) =>
-        ColumnMeta(st.getPath.getName, i, name, t.name, t.sparkType.simpleString)
+    val metas = NativeIO.snapshot(Seq(dir), conf).flatMap { part =>
+      part.header.zipWithIndex.map { case ((name, t), i) =>
+        ColumnMeta(part.status.getPath.getName, i, name, t.name, t.sparkType.simpleString)
       }
     }
     spark.createDataFrame(metas)
@@ -135,40 +138,38 @@ object NativeTableOps {
     val conf = spark.sessionState.newHadoopConf()
     val (dst, dstFs) = emptyTarget(conf, dstDir, "TTL")
 
-    val src = spark.read.format("clickhouse_native").option("mergeSchema", "true").load(srcDir)
+    val src = bind(spark, srcDir)
     require(src.columns.contains(tsCol), s"TTL column '$tsCol' not in table")
     val expiredPred = col(tsCol) < cutoff
     val (parts, Seq(mayLive, mayExpire)) =
-      touchedParts(spark, srcDir, src, Seq(col(tsCol) >= cutoff, expiredPred))
+      touchedParts(srcDir, src, Seq(col(tsCol) >= cutoff, expiredPred))
 
     val dropped = Seq.newBuilder[String]
     val copied = Seq.newBuilder[String]
-    val rewrite = Seq.newBuilder[FileStatus]
+    val rewrite = Seq.newBuilder[NativePart]
 
-    parts.foreach { st =>
-      val p = st.getPath
-      lazy val tsNonNullable = NativeIO.header(st, conf)
-        .exists { case (n, t) => n == tsCol && !ChType.isNullable(t) }
+    parts.foreach { part =>
+      val p = part.status.getPath
+      lazy val tsNonNullable =
+        part.header.exists { case (n, t) => n == tsCol && !ChType.isNullable(t) }
       if (!mayLive(p.toString) && tsNonNullable) {
         dropped += p.getName // provably all-expired: metadata-only drop
       } else if (!mayExpire(p.toString)) {
         NativeIndex.copyPart(p.getFileSystem(conf), p, dstFs, dst, conf)
         copied += p.getName
-      } else rewrite += st
+      } else rewrite += part
     }
 
     val rewriteParts = rewrite.result()
     if (rewriteParts.nonEmpty) {
-      val w = spark.read.format("clickhouse_native").option("mergeSchema", "true")
-        .load(rewriteParts.map(_.getPath.toString): _*)
+      val w = load(spark, rewriteParts)
         .filter(!coalesce(expiredPred, lit(false)))
         .write.format("clickhouse_native")
-      declaredCodec(spark, rewriteParts)
+      declaredCodec(rewriteParts)
         .fold(w)(c => w.option("compression", c))
         .mode("append").save(dstDir)
     }
-    TtlResult(dropped.result(), copied.result(),
-      rewriteParts.map(_.getPath.getName))
+    TtlResult(dropped.result(), copied.result(), rewriteParts.map(_.status.getPath.getName))
   }
 
   /** Per-part outcome of [[applyTtlRecompress]]. */
@@ -191,28 +192,19 @@ object NativeTableOps {
     val conf = spark.sessionState.newHadoopConf()
     val (dst, dstFs) = emptyTarget(conf, dstDir, "recompress")
 
-    val src = spark.read.format("clickhouse_native").option("mergeSchema", "true").load(srcDir)
+    val src = bind(spark, srcDir)
     require(src.columns.contains(tsCol), s"TTL column '$tsCol' not in table")
-    val (parts, Seq(mayLive)) = touchedParts(spark, srcDir, src, Seq(col(tsCol) >= cutoff))
+    val (parts, Seq(mayLive)) = touchedParts(srcDir, src, Seq(col(tsCol) >= cutoff))
 
-    val cold = Seq.newBuilder[Path]
-    val copied = Seq.newBuilder[String]
-    parts.foreach { st =>
-      val p = st.getPath
-      if (!mayLive(p.toString)) cold += p
-      else {
-        NativeIndex.copyPart(p.getFileSystem(conf), p, dstFs, dst, conf)
-        copied += p.getName
-      }
+    val (cold, hot) = parts.partition(part => !mayLive(part.status.getPath.toString))
+    hot.foreach { part =>
+      val p = part.status.getPath
+      NativeIndex.copyPart(p.getFileSystem(conf), p, dstFs, dst, conf)
     }
-    val coldPaths = cold.result()
-    if (coldPaths.nonEmpty) {
-      spark.read.format("clickhouse_native").option("mergeSchema", "true")
-        .load(coldPaths.map(_.toString): _*)
-        .write.format("clickhouse_native").option("compression", codec)
+    if (cold.nonEmpty)
+      load(spark, cold).write.format("clickhouse_native").option("compression", codec)
         .mode("append").save(dstDir)
-    }
-    RecompressResult(coldPaths.map(_.getName), copied.result())
+    RecompressResult(cold.map(_.status.getPath.getName), hot.map(_.status.getPath.getName))
   }
 
   /**
@@ -288,10 +280,9 @@ object NativeTableOps {
    * isolation from the rewrite job.
    */
   private[native] def classifyParts(spark: SparkSession, srcDir: String,
-      src: DataFrame, pred: Column): (Seq[org.apache.hadoop.fs.FileStatus],
-        Seq[org.apache.hadoop.fs.FileStatus]) = {
-    val (parts, Seq(affected)) = touchedParts(spark, srcDir, src, Seq(pred))
-    parts.partition(st => affected(st.getPath.toString))
+      src: DataFrame, pred: Column): (Seq[NativePart], Seq[NativePart]) = {
+    val (parts, Seq(affected)) = touchedParts(srcDir, src, Seq(pred))
+    parts.partition(part => affected(part.status.getPath.toString))
   }
 
   private def mutate(spark: SparkSession, srcDir: String, dstDir: String,
@@ -299,19 +290,19 @@ object NativeTableOps {
     val conf = spark.sessionState.newHadoopConf()
     val (dst, dstFs) = emptyTarget(conf, dstDir, "mutation")
 
-    val src = spark.read.format("clickhouse_native").option("mergeSchema", "true").load(srcDir)
+    val src = bind(spark, srcDir)
     set.keys.foreach(c => require(src.columns.contains(c),
       s"UPDATE assigns unknown column '$c' (table has ${src.columns.mkString(", ")})"))
 
     val (affected, untouched) = classifyParts(spark, srcDir, src, pred)
 
-    untouched.foreach { st =>
-      NativeIndex.copyPart(st.getPath.getFileSystem(conf), st.getPath, dstFs, dst, conf)
+    untouched.foreach { part =>
+      val p = part.status.getPath
+      NativeIndex.copyPart(p.getFileSystem(conf), p, dstFs, dst, conf)
     }
 
     if (affected.nonEmpty) {
-      val adf = spark.read.format("clickhouse_native").option("mergeSchema", "true")
-        .load(affected.map(_.getPath.toString): _*)
+      val adf = load(spark, affected)
       val hit = coalesce(pred, lit(false))
       val out =
         if (delete) adf.filter(!hit)
@@ -329,11 +320,11 @@ object NativeTableOps {
           adf.select(scala.collection.immutable.ArraySeq.unsafeWrapArray(cols): _*)
         }
       val w = out.write.format("clickhouse_native")
-      declaredCodec(spark, affected)
+      declaredCodec(affected)
         .fold(w)(c => w.option("compression", c))
         .mode("append").save(dstDir)
     }
-    spark.read.format("clickhouse_native").option("mergeSchema", "true").load(dstDir)
+    bind(spark, dstDir)
   }
 
   /**
@@ -350,17 +341,18 @@ object NativeTableOps {
     require(name.matches("[A-Za-z0-9_]+"), s"projection name must be simple: $name")
     val conf = spark.sessionState.newHadoopConf()
     val dst = s"$baseDir/projections/$name"
-    spark.read.format("clickhouse_native").option("mergeSchema", "true").load(baseDir)
-      .repartitionByRange(numParts, sortCols.map(col): _*)
+    val base = bind(spark, baseDir)
+    base.repartitionByRange(numParts, sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.format("clickhouse_native").mode("overwrite").save(dst)
-    // manifest of the base parts this projection reflects — parts are
-    // immutable, so name-set equality IS freshness (see
-    // readWithProjections); written last, so a crashed build leaves an
-    // unusable (manifest-less) projection, never a wrong one
+    // manifest of the base parts this projection reflects: the bind's
+    // snapshot, which the build's scan read — parts are immutable, so
+    // name-set equality IS freshness (see readWithProjections); written
+    // last, so a crashed build leaves an unusable (manifest-less)
+    // projection, never a wrong one
     val fs = new Path(dst).getFileSystem(conf)
     val out = fs.create(new Path(dst, ManifestName), true)
-    try out.write(basePartNames(spark, baseDir).mkString("\n")
+    try out.write(partNames(boundParts(base)).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     dst
@@ -374,16 +366,11 @@ object NativeTableOps {
     * keep their codec byte-identically, so without this the rewritten
     * fraction would silently decay a compressed table's storage tier
     * on every maintenance cycle. */
-  private def declaredCodec(spark: SparkSession, parts: Seq[FileStatus]): Option[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    parts.map { st =>
-      NativeIndex.declaredCompression(st.getPath.getFileSystem(conf), st.getPath, st.getLen)
-        .getOrElse("none")
-    }.distinct match {
+  private def declaredCodec(parts: Seq[NativePart]): Option[String] =
+    parts.map(_.index.flatMap(_._2.get("compression")).getOrElse("none")).distinct match {
       case Seq(c) if c != "none" => Some(c)
       case _ => None
     }
-  }
 
   /** The empty directory a maintenance pass writes into: results land
     * BESIDE the live table; swapping them in is the catalog's job. */
@@ -397,9 +384,28 @@ object NativeTableOps {
     (dst, dstFs)
   }
 
-  private def basePartNames(spark: SparkSession, baseDir: String): Seq[String] =
-    NativeIO.resolveFileStatuses(Seq(baseDir),
-      spark.sessionState.newHadoopConf()).map(_.getPath.getName).sorted
+  /**
+   * A pass's one bind of `dir` under the union schema. Its part
+   * snapshot ([[boundParts]]) serves the pass's planning and checks,
+   * and the first scan of the returned frame.
+   */
+  private def bind(spark: SparkSession, dir: String*): DataFrame =
+    spark.read.format("clickhouse_native").option("mergeSchema", "true").load(dir: _*)
+
+  /** The parts a rewrite job reads, bound afresh (their own listing). */
+  private def load(spark: SparkSession, parts: Seq[NativePart]): DataFrame =
+    bind(spark, parts.map(_.status.getPath.toString): _*)
+
+  /** The part snapshot the bind of `src` listed. */
+  private def boundParts(src: DataFrame): Seq[NativePart] =
+    src.queryExecution.analyzed.collectFirst {
+      case r: DataSourceV2Relation if r.table.isInstanceOf[NativeTable] =>
+        r.table.asInstanceOf[NativeTable].listed
+    }.flatten.getOrElse(throw new IllegalArgumentException(
+      "a maintenance pass needs a schema-inferred clickhouse_native load"))
+
+  private def partNames(parts: Seq[NativePart]): Seq[String] =
+    parts.map(_.status.getPath.getName).sorted
 
   /**
    * Projection-aware read — CH's optimizer move
@@ -422,7 +428,8 @@ object NativeTableOps {
     val base = new Path(baseDir)
     val fs = base.getFileSystem(conf)
     val projRoot = new Path(base, "projections")
-    val baseParts = basePartNames(spark, baseDir)
+    val src = bind(spark, baseDir)
+    val baseParts = partNames(boundParts(src))
     def fresh(dir: String): Boolean = {
       val m = new Path(dir, ManifestName)
       fs.exists(m) && {
@@ -434,61 +441,55 @@ object NativeTableOps {
         recorded.filter(_.nonEmpty).sorted == baseParts
       }
     }
-    val src = spark.read.format("clickhouse_native").option("mergeSchema", "true").load(baseDir)
     // a projection must also COVER the base's (possibly ALTER-evolved)
     // column set: a metadata-only ADD COLUMN leaves the base part set
     // unchanged, so a pre-ALTER projection still passes the manifest
     // check — but its copy lacks the new column, and routing to it
     // would silently drop that column from the read. Schema coverage
-    // is one header read per projection (same merge rules).
-    def covers(dir: String): Boolean =
-      try {
-        val projCols = spark.read.format("clickhouse_native")
-          .option("mergeSchema", "true").load(dir).columns.toSet
-        src.columns.forall(projCols.contains)
-      } catch { case scala.util.control.NonFatal(_) => false }
-    val layouts = baseDir +: (if (fs.exists(projRoot))
-      fs.listStatus(projRoot).filter(_.isDirectory)
-        .map(_.getPath.toString).toSeq.sorted.filter(d => fresh(d) && covers(d))
-    else Seq.empty)
+    // is one bind per projection (same merge rules); its snapshot also
+    // plans the projection and, when it wins, serves its read.
+    def covering(dir: String): Option[DataFrame] =
+      try Some(bind(spark, dir)).filter(p => src.columns.toSet.subsetOf(p.columns.toSet))
+      catch { case scala.util.control.NonFatal(_) => None }
     val filters = pushedZoneFilters(src, pred)
-    val chosen =
-      if (filters.isEmpty) baseDir
-      else layouts.minBy { dir =>
-        plannedPartitions(planner(spark, dir, src), filters).map { p =>
-          if (p.blockCount < 0) 1000000L else p.blockCount.toLong // unindexed: assume worst
-        }.sum
+    val (chosen, chosenDf) =
+      if (filters.isEmpty) (baseDir, src)
+      else {
+        val projections = if (!fs.exists(projRoot)) Seq.empty
+          else fs.listStatus(projRoot).filter(_.isDirectory).map(_.getPath.toString)
+            .toSeq.sorted.filter(fresh).flatMap(d => covering(d).map(d -> _))
+        ((baseDir -> src) +: projections).minBy { case (dir, df) =>
+          plannedPartitions(planner(dir, df), filters).map { p =>
+            if (p.blockCount < 0) 1000000L else p.blockCount.toLong // unindexed: assume worst
+          }.sum
+        }
       }
-    // reuse the already-bound base relation when the base wins — the
-    // second mergeSchema bind would repeat the per-part header sweep
-    val chosenDf =
-      if (chosen == baseDir) src
-      else spark.read.format("clickhouse_native")
-        .option("mergeSchema", "true").load(chosen)
     (chosenDf.filter(pred), chosen)
   }
 
   /**
    * Which parts each predicate can touch, as the native scan's own
-   * planner decides it: one scan of `dir` (which `src` loads) lists
-   * the parts once, reads each sidecar at most once, and re-plans
+   * planner decides it: one scan of `dir` (which `src` loads) plans
+   * from the parts `src`'s bind listed, and re-plans
    * through its runtime-filter entry under each predicate's pushed
    * filters. Returns the listing and, per predicate, the paths of the
    * parts with a planned partition; every other part provably holds no
    * matching row. The scan only plans; it is never executed.
    */
-  private def touchedParts(spark: SparkSession, dir: String, src: DataFrame,
-      preds: Seq[Column]): (Seq[FileStatus], Seq[Set[String]]) = {
-    val scan = planner(spark, dir, src)
+  private def touchedParts(dir: String, src: DataFrame,
+      preds: Seq[Column]): (Seq[NativePart], Seq[Set[String]]) = {
+    val scan = planner(dir, src)
     val touched = preds.map(pred =>
       plannedPartitions(scan, pushedZoneFilters(src, pred)).map(_.file).toSet)
-    (scan.parts.map(_.status), touched)
+    (scan.parts, touched)
   }
 
-  /** A fresh native scan of `dir` under `src`'s schema, used only to plan. */
-  private def planner(spark: SparkSession, dir: String, src: DataFrame): NativeScan =
+  /** A native scan of `dir` over the parts `src`'s bind listed, used only to plan. */
+  private def planner(dir: String, src: DataFrame): NativeScan = {
+    val parts = boundParts(src)
     new NativeScan(src.schema, src.schema, Seq(dir), -1,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+      new SerializableHadoopConf(NativeIO.sessionHadoopConf()), listed = () => Some(parts))
+  }
 
   private def plannedPartitions(scan: NativeScan, filters: Array[Filter]): Seq[NativeInputPartition] = {
     scan.filter(filters)

@@ -163,6 +163,52 @@ class NativeScanSpec extends AnyFunSuite {
     assert(opens.values.stream.allMatch(_ == 1), opens)
   }
 
+  /** An 8-part table written with `sortBy=id`, ids 1..8000 range-clustered. */
+  private def sortedParts(tag: String): String = {
+    import spark.implicits._
+    val dir = tmpDir(tag)
+    (1 to 8000).map(i => (i.toLong, s"name_$i", i * 0.5)).toDF("id", "name", "v")
+      .repartitionByRange(8, $"id").write.format("clickhouse_native")
+      .option("sortBy", "id").mode("overwrite").save(dir)
+    dir
+  }
+
+  test("a clickhouse_native('<dir>') point query lists once and opens each sidecar at most once") {
+    val dir = sortedParts("tvf-once")
+    CountGlobFileSystem.counting {
+      val got = spark.sql(s"SELECT id, name FROM clickhouse_native('countglob://$dir') WHERE id = 4321")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(got === Seq((4321L, "name_4321")))
+      // the bind's listing serves the scan: no second glob, no second listing
+      assert(CountGlobFileSystem.calls.get === 1)
+      assert(CountGlobFileSystem.listings.get === 1)
+      val opens = CountGlobFileSystem.sidecarOpens
+      assert(opens.size === 8, opens)
+      assert(opens.values.stream.allMatch(_ == 1), opens)
+    }
+  }
+
+  test("an explicit-schema read lists once") {
+    val dir = sortedParts("schema-once")
+    CountGlobFileSystem.counting {
+      val df = spark.read.format("clickhouse_native").schema(schema).load(s"countglob://$dir")
+      assert(df.filter("id < 10").count() === 9L)
+      assert(CountGlobFileSystem.calls.get === 1)
+      assert(CountGlobFileSystem.listings.get === 1)
+    }
+  }
+
+  test("a bound DataFrame's first run reads its bind's parts, the next run lists again") {
+    import spark.implicits._
+    val (dir, _) = writePart("rerun", 1000)
+    val df = spark.read.format("clickhouse_native").load(dir)
+    (1001 to 1500).map(i => (i.toLong, s"name_$i", i * 0.5)).toDF("id", "name", "v").coalesce(1)
+      .write.format("clickhouse_native").mode("append").save(dir)
+    assert(df.count() === 1000L)
+    assert(df.count() === 1500L)
+    assert(df.agg(org.apache.spark.sql.functions.max("id")).head().getLong(0) === 1500L)
+  }
+
   test("bucketed tables keep their bucketId on every split") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.splitns")
@@ -314,6 +360,26 @@ class NativeScanSpec extends AnyFunSuite {
     }, e.toString)
   }
 
+  test("a column name declaring ~2 GiB fails naming the file at bind and at scan, never OOM") {
+    val dir = tmpDir("namelen")
+    new java.io.File(dir).mkdirs()
+    val file = new java.io.File(dir, "part-hostile.clickhouse")
+    // one block (1 column, 1 row) whose column name claims ~2 GiB; 4 bytes follow
+    Files.write(file.toPath, Array[Byte](1, 1) ++ varint(Int.MaxValue - 8L) ++ "abcd".getBytes)
+    spark // session start-up allocates on this thread: not the probe's
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = threads.getThreadAllocatedBytes(tid)
+    val e = intercept[IOException](new ClickHouseNativeDataSource().inferSchema(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Map.of("path", dir))))
+    val allocated = threads.getThreadAllocatedBytes(tid) - before
+    assert(allocated < (64L << 20), s"header probe allocated $allocated bytes")
+    assert(e.getMessage.contains("corrupt or truncated file") &&
+      e.getMessage.contains(file.getName), e.getMessage)
+    failsNamingFile(dir, file, "column name of ~2 GiB")
+  }
+
   test("hostile block structure fails with an IOException in the typed decoder") {
     def block(cols: (String, String, NativeCodec.Output => Unit)*)(rows: Int): Array[Byte] = {
       val bos = new ByteArrayOutputStream()
@@ -357,20 +423,41 @@ class NativeScanSpec extends AnyFunSuite {
 }
 
 /** Local file system (scheme `countglob`) that counts `globStatus`
-  * calls and the opens of each sidecar (by file name). */
+  * and `listStatus` calls and the opens of each sidecar and each data
+  * file (by file name). */
 class CountGlobFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("countglob:///")
   override def globStatus(pattern: Path): Array[org.apache.hadoop.fs.FileStatus] = {
     CountGlobFileSystem.calls.incrementAndGet()
     super.globStatus(pattern)
   }
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountGlobFileSystem.listings.incrementAndGet()
+    super.listStatus(f)
+  }
   override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
-    if (f.getName.endsWith(".chidx")) CountGlobFileSystem.sidecarOpens.merge(f.getName, 1, _ + _)
+    val opens =
+      if (f.getName.endsWith(".chidx")) CountGlobFileSystem.sidecarOpens
+      else CountGlobFileSystem.dataOpens
+    opens.merge(f.getName, 1, _ + _)
     super.open(f, bufferSize)
   }
 }
 
 object CountGlobFileSystem {
+  /** `globStatus` calls. */
   val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** `listStatus` calls. */
+  val listings = new java.util.concurrent.atomic.AtomicInteger(0)
   val sidecarOpens = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  val dataOpens = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+
+  /** Run `body` with the scheme in the session's Hadoop conf (so
+    * executor reads count too) and every counter reset first. */
+  def counting[A](body: => A): A =
+    SparkTestBase.withSQLConf("fs.countglob.impl" -> classOf[CountGlobFileSystem].getName,
+      "fs.countglob.impl.disable.cache" -> "true") {
+      calls.set(0); listings.set(0); sidecarOpens.clear(); dataOpens.clear()
+      body
+    }
 }

@@ -1,5 +1,7 @@
 package graft.sources.native
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
 
 import org.apache.spark.sql.functions._
@@ -183,6 +185,37 @@ class NativeTableOpsSpec extends AnyFunSuite {
         new org.apache.hadoop.fs.Path(f.getPath)).getName
       assert(new java.io.File(dst, sidecar).exists(),
         s"sidecar $sidecar missing for copied part $n")
+    }
+  }
+
+  test("TTL classifies its source from one listing, parsing each sidecar once") {
+    import spark.implicits._
+    val src = tmp("ttl-once-src")
+    val dst = tmp("ttl-once-dst")
+    // 8 time-ordered parts of ~1000 minutes each
+    (0 until 8000).map(i => (i.toLong, i % 7)).toDF("id", "grp")
+      .select(col("id"),
+        timestamp_micros(col("id") * 60L * 1000000L).cast("timestamp_ntz").as("ts"))
+      .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
+      .write.format("clickhouse_native").mode("overwrite").save(src)
+    val cutoff = timestamp_micros(lit(4500L * 60L * 1000000L)).cast("timestamp_ntz")
+    CountGlobFileSystem.counting {
+      val res = NativeTableOps.applyTtl(spark, s"countglob://$src", dst, "ts", cutoff)
+      assert((res.dropped.size, res.copied.size, res.rewritten.size) === ((4, 3, 1)), res)
+      // the bind lists the source once; its snapshot plans, checks the
+      // drop tier and picks the codec. The rewrite job binds its own
+      // part (one glob of a file path, no directory listing).
+      assert(CountGlobFileSystem.listings.get === 1)
+      assert(CountGlobFileSystem.calls.get === 1 + res.rewritten.size)
+      // one sidecar parse per part; copied parts are byte-copied with
+      // their sidecar, and the rewrite job parses its part's once more
+      val extra = (res.copied ++ res.rewritten).toSet
+      val expected = partFiles(src).map { f =>
+        s".${f.getName}.chidx" -> (if (extra(f.getName)) 2 else 1)
+      }.toMap
+      assert(CountGlobFileSystem.sidecarOpens.asScala.toMap === expected)
+      // a dropped part's data file is opened for its header only
+      res.dropped.foreach(n => assert(CountGlobFileSystem.dataOpens.get(n) === 1, n))
     }
   }
 

@@ -470,6 +470,29 @@ class ChTcpProtocolSpec extends AnyFunSuite {
     }
   }
 
+  test("a column name declaring ~2 GiB fails naming the url, never allocating ahead of its bytes") {
+    val len = new ByteArrayOutputStream()
+    val out = new Output(len)
+    out.writeVarUInt(Int.MaxValue.toLong - 8)
+    out.flush()
+    // a Data block of one column whose name claims ~2 GiB; 4 bytes, then the stream ends
+    val hostile = hex(s"01 00 $blockInfo 01 00") ++ len.toByteArray ++ hex("61 62 63 64")
+    spark // session start-up allocates on this thread: not the probe's
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    withScriptedServer(clientHelloGolden, serverHelloModern,
+      queryGoldenModern, hostile) { port =>
+      val options = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("transport", "tcp", "url", s"tcp://127.0.0.1:$port", "query", "SELECT 1"))
+      val before = threads.getThreadAllocatedBytes(tid)
+      val e = intercept[java.io.IOException](new ClickHouseRemoteDataSource().inferSchema(options))
+      val allocated = threads.getThreadAllocatedBytes(tid) - before
+      assert(allocated < (64L << 20), s"schema probe allocated $allocated bytes")
+      assert(e.getMessage.contains(s"schema probe of tcp://127.0.0.1:$port failed"), e.getMessage)
+    }
+  }
+
   test("transport=tcp surfaces a server exception with code and message") {
     withScriptedServer(clientHelloGolden, serverHelloModern,
       queryGoldenModern, exceptionPacket) { port =>
