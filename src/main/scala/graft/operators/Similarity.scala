@@ -34,6 +34,14 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dotD(a, b) / (sqrt(dotD(a, a)) * sqrt(dotD(b, b)))
 
+  /** The `k` best-scored (q_id, vec_id, sim, rn) rows per query: sim
+    * descending, ties broken by vec_id, so the ranking is deterministic. */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
+    scored.select(col("q_id"), col("vec_id"), col("sim"), row_number().over(w).as("rn"))
+      .filter(col("rn") <= k)
+  }
+
   /**
    * Exact top-k neighbours for each query vector.
    * The query side MUST be small (it is broadcast to every executor);
@@ -47,9 +55,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(cosine(col("embedding"), col("q_emb")), 4).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
-    joined.select(col("q_id"), col("vec_id"), col("sim"), row_number().over(w).as("rn"))
-      .filter(col("rn") <= k)
+    topKPerQuery(joined, k)
   }
 
   /** Deterministic pseudo-random hyperplane component (unit-free sign test). */
@@ -158,12 +164,8 @@ object Similarity {
     * explodes with cells·probes). `broadcastProbes` distinguishes the
     * small-query-set path from the corpus-vs-corpus kNN-graph path. */
   private def scoreProbedCells(cand: DataFrame, probes: DataFrame, k: Int,
-      broadcastProbes: Boolean): DataFrame = {
-    val scored = probedPairs(cand, probes, broadcastProbes)
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
-    scored.select(col("q_id"), col("vec_id"), col("sim"), row_number().over(w).as("rn"))
-      .filter(col("rn") <= k)
-  }
+      broadcastProbes: Boolean): DataFrame =
+    topKPerQuery(probedPairs(cand, probes, broadcastProbes), k)
 
   /** The scored candidate pairs the probed-cell join admits — the
     * pre-ranking stage of [[scoreProbedCells]], extracted so the
@@ -703,9 +705,7 @@ object Similarity {
       .join(broadcast(qnorm), "q_id")
       .select(col("q_id"), col("vec_id"),
         round(col("vdot") / (sqrt(col("v2")) * sqrt(col("q2"))), 4).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
-    scored.select(col("q_id"), col("vec_id"), col("sim"), row_number().over(w).as("rn"))
-      .filter(col("rn") <= k)
+    topKPerQuery(scored, k)
   }
 
   /**
@@ -800,9 +800,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(cosine(col("embedding"), col("q_emb")), 4).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
-    scored.select(col("q_id"), col("vec_id"), col("sim"), row_number().over(w).as("rn"))
-      .filter(col("rn") <= k)
+    topKPerQuery(scored, k)
   }
 
   /**
@@ -927,8 +925,6 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id") && col(labelCol) =!= col("q_label"))
       .select(col("q_id"), col("vec_id"),
         round(cosine(col("embedding"), col("q_emb")), 4).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
-    scored.select(col("q_id"), col("vec_id"), col("sim"), row_number().over(w).as("rn"))
-      .filter(col("rn") <= k)
+    topKPerQuery(scored, k)
   }
 }

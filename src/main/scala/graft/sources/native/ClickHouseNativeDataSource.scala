@@ -65,12 +65,74 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val paths = NativeIO.paths(options)
     val files = NativeIO.snapshot(paths, NativeIO.sessionHadoopConf())
+    bound = Some(paths -> files)
+    NativeIO.schemaOf(paths, files, options.getBoolean("mergeSchema", false))
+  }
+
+  /** The table of one bind. After [[inferSchema]] the table carries
+    * that listing for its first scan; with a user-given schema its
+    * scans list for themselves. */
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: util.Map[String, String]): Table = {
+    val paths = NativeIO.paths(new CaseInsensitiveStringMap(properties))
+    val listed = bound.collect { case (p, parts) if p == paths => parts }
+    bound = None
+    new NativeTable(schema, paths, listed = listed)
+  }
+}
+
+private[sources] object NativeIO {
+  /**
+   * Session Hadoop configuration (S3/GCS credentials, fs.* settings) —
+   * driver-side capture; ship to executors via [[SerializableHadoopConf]].
+   * Bare `new Configuration()` would silently drop all of it.
+   */
+  def sessionHadoopConf(): Configuration =
+    SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
+      .getOrElse(new Configuration())
+
+  /** Extract load paths from options ("path" or JSON-array "paths"). */
+  def paths(options: CaseInsensitiveStringMap): Seq[String] = {
+    val multi = Option(options.get("paths")).map { json =>
+      // minimal JSON string-array parse: ["a","b"]
+      json.trim.stripPrefix("[").stripSuffix("]").split(",")
+        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
+    }.getOrElse(Seq.empty)
+    val single = Option(options.get("path")).toSeq
+    (multi ++ single).distinct
+  }
+
+  /**
+   * One listing of `paths` — dirs and globs expanded to their data
+   * files, name-sorted — as a part snapshot: the only way native code
+   * lists a table. Each part reads its sidecar and header on first
+   * use, so everything planned from one snapshot probes a part once.
+   */
+  def snapshot(paths: Seq[String], conf: Configuration): Seq[NativePart] =
+    paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
+      matches.flatMap { st =>
+        if (st.isDirectory)
+          fs.listStatus(st.getPath).toSeq
+            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        else Seq(st)
+      }
+    }.sortBy(_.getPath.toString).map(new NativePart(_, conf))
+
+  /**
+   * The schema of a part snapshot `files` of `paths`: the first
+   * readable block header, or with `mergeSchema` the union of every
+   * readable header. Reads each part's header at most once (a bind
+   * probes its parts; a maintenance rewrite reuses the probes).
+   */
+  def schemaOf(paths: Seq[String], files: Seq[NativePart], mergeSchema: Boolean): StructType = {
     if (files.isEmpty)
       // A typo'd path must fail loudly, not scan as 0 rows.
       throw new IllegalArgumentException(
         s"clickhouse_native: no files found for path(s): ${paths.mkString(", ")}")
-    bound = Some(paths -> files)
-    if (options.getBoolean("mergeSchema", false)) {
+    if (mergeSchema) {
       // Schema evolution: the UNION of every readable file header, in
       // first-seen column order — the layout a long-lived table has
       // after `ALTER TABLE ADD COLUMN` (old parts simply lack the new
@@ -161,58 +223,6 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
     }
   }
 
-  /** The table of one bind. After [[inferSchema]] the table carries
-    * that listing for its first scan; with a user-given schema its
-    * scans list for themselves. */
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = NativeIO.paths(new CaseInsensitiveStringMap(properties))
-    val listed = bound.collect { case (p, parts) if p == paths => parts }
-    bound = None
-    new NativeTable(schema, paths, listed = listed)
-  }
-}
-
-private[sources] object NativeIO {
-  /**
-   * Session Hadoop configuration (S3/GCS credentials, fs.* settings) —
-   * driver-side capture; ship to executors via [[SerializableHadoopConf]].
-   * Bare `new Configuration()` would silently drop all of it.
-   */
-  def sessionHadoopConf(): Configuration =
-    SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
-
-  /** Extract load paths from options ("path" or JSON-array "paths"). */
-  def paths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val multi = Option(options.get("paths")).map { json =>
-      // minimal JSON string-array parse: ["a","b"]
-      json.trim.stripPrefix("[").stripSuffix("]").split(",")
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    }.getOrElse(Seq.empty)
-    val single = Option(options.get("path")).toSeq
-    (multi ++ single).distinct
-  }
-
-  /**
-   * One listing of `paths` — dirs and globs expanded to their data
-   * files, name-sorted — as a part snapshot: the only way native code
-   * lists a table. Each part reads its sidecar and header on first
-   * use, so everything planned from one snapshot probes a part once.
-   */
-  def snapshot(paths: Seq[String], conf: Configuration): Seq[NativePart] =
-    paths.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      matches.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        else Seq(st)
-      }
-    }.sortBy(_.getPath.toString).map(new NativePart(_, conf))
-
   /** (rows, blocks) of one data file from a walk over its block
     * headers — no value is decoded. A corrupt or truncated file fails
     * with an IOException naming it. */
@@ -238,9 +248,10 @@ private[sources] object NativeIO {
 
 /**
  * A native table of one bind. `listed` is the part snapshot that bind
- * took (schema inference), if any. The first scan of the table that
- * lists takes it instead of listing again; every later scan lists for
- * itself, so a query run after an append sees the new part.
+ * took (schema inference, or the parts a maintenance rewrite holds),
+ * if any. The first scan of the table takes it instead of listing
+ * again; every later scan lists for itself, so a query run after an
+ * append sees the new part.
  */
 private[native] class NativeTable(tableSchema: StructType, paths: Seq[String],
     bucket: Option[(String, Int)] = None, tableProps: Map[String, String] = Map.empty,
@@ -288,6 +299,13 @@ private[native] class NativeScanBuilder(fullSchema: StructType, paths: Seq[Strin
   private var limit: Int = -1
   private var countStar = false
   private var prunableFilters: Array[Filter] = Array.empty
+  private val conf = new SerializableHadoopConf(NativeIO.sessionHadoopConf())
+
+  /** The query's one listing, taken on first use: the table's bind
+    * snapshot when there is one, else this builder's own. Whichever
+    * scan the builder builds reads it. */
+  private lazy val parts: Seq[NativePart] =
+    listed().getOrElse(NativeIO.snapshot(paths, conf.value))
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // Catalyst hands us exactly the referenced columns; decode only those.
@@ -310,27 +328,29 @@ private[native] class NativeScanBuilder(fullSchema: StructType, paths: Seq[Strin
   override def pushedFilters(): Array[Filter] = prunableFilters
 
   /**
-   * `count(*)` pushdown: the row count is in every block header, so a
-   * count scan never decodes a single value — each partition skips
-   * through its file summing header counts and returns ONE row. Spark
-   * sums the per-partition partials (supportCompletePushDown stays
-   * false, so multi-file scans work unchanged). At 100 TB this turns
-   * the reference's flagship query (README.md:63) from a full
-   * row-emission pass into pure block-header walking.
+   * `count(*)` answers on the driver from part metadata, as ClickHouse's
+   * `optimize_trivial_count_query` does: when every part of the
+   * snapshot carries a valid sidecar, the count is the sum of their
+   * recorded row counts — a complete pushdown to a one-row local scan
+   * that no executor reads a file for. Otherwise the pushdown is
+   * declined and Spark counts through the ordinary scan with an empty
+   * projection, which skips through each block without decoding a value.
    */
-  override def pushAggregation(agg: aggregate.Aggregation): Boolean = {
-    val ok = limit < 0 && agg.groupByExpressions.isEmpty &&
+  override def supportCompletePushDown(agg: aggregate.Aggregation): Boolean =
+    limit < 0 && agg.groupByExpressions.isEmpty &&
       agg.aggregateExpressions.length == 1 &&
-      agg.aggregateExpressions()(0).isInstanceOf[aggregate.CountStar]
-    if (ok) countStar = true
-    ok
+      agg.aggregateExpressions()(0).isInstanceOf[aggregate.CountStar] &&
+      parts.forall(_.rowCount.isDefined)
+
+  override def pushAggregation(agg: aggregate.Aggregation): Boolean = {
+    countStar = supportCompletePushDown(agg)
+    countStar
   }
 
-  override def build(): Scan = {
-    val conf = new SerializableHadoopConf(NativeIO.sessionHadoopConf())
-    if (countStar) new NativeCountScan(paths, conf, listed)
-    else new NativeScan(fullSchema, required, paths, limit, conf, prunableFilters, bucket, listed)
-  }
+  override def build(): Scan =
+    if (countStar) new NativeCountScan(paths, parts.flatMap(_.rowCount).sum)
+    else new NativeScan(fullSchema, required, paths, limit, conf, prunableFilters, bucket,
+      () => Some(parts))
 }
 
 /**
@@ -450,51 +470,12 @@ private[native] class NativeMicroBatchStream(required: StructType, paths: Seq[St
   override def stop(): Unit = ()
 }
 
-/** Scan produced when count(*) was pushed: one partial count per file. */
-private[native] class NativeCountScan(paths: Seq[String], conf: SerializableHadoopConf,
-    listed: () => Option[Seq[NativePart]] = () => None) extends Scan with Batch {
+/** The scan a pushed `count(*)` builds: one row, answered on the driver. */
+private[native] class NativeCountScan(paths: Seq[String], count: Long) extends LocalScan {
   override def readSchema(): StructType =
     StructType(Seq(StructField("count", LongType, nullable = false)))
-  override def toBatch: Batch = this
+  override def rows(): Array[InternalRow] = Array(new GenericInternalRow(Array[Any](count)))
   override def description(): String = s"clickhouse_native count(*) ${paths.mkString(",")}"
-
-  /** The scan's one file listing, taken on first use (as [[NativeScan]]'s). */
-  private lazy val files: Seq[FileStatus] =
-    listed().getOrElse(NativeIO.snapshot(paths, conf.value)).map(_.status)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(st => NativeCountPartition(st.getPath.toString, st.getLen): InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NativeCountReaderFactory(conf)
-}
-
-/** One file of a count(*) scan, with its length from the listing. */
-private[native] case class NativeCountPartition(file: String, length: Long) extends InputPartition
-
-private[native] class NativeCountReaderFactory(conf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val part = partition.asInstanceOf[NativeCountPartition]
-      private var emitted = false
-      private var count = 0L
-      override def next(): Boolean = {
-        if (emitted) return false
-        val path = new Path(part.file)
-        val fs = path.getFileSystem(conf.value)
-        // Indexed file: the row count is in the sidecar — a count(*)
-        // over an indexed directory never opens a data file at all.
-        count = NativeIndex.read(fs, path, part.length) match {
-          case Some(entries) => entries.map(_.rows).sum
-          case None => NativeIO.walkRowCount(path, conf.value)._1
-        }
-        emitted = true
-        true
-      }
-      override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-      override def close(): Unit = ()
-    }
 }
 
 private[native] class NativeScan(fullSchema: StructType, required: StructType,
@@ -595,7 +576,7 @@ private[native] class NativeScan(fullSchema: StructType, required: StructType,
     // file has one (a partial sum would mislead the CBO low).
     private lazy val totalRows: OptionalLong =
       try {
-        val counts = parts.map(_.index.map(_._1.map(_.rows).sum))
+        val counts = parts.map(_.rowCount)
         if (counts.nonEmpty && counts.forall(_.isDefined))
           OptionalLong.of(counts.flatten.sum)
         else OptionalLong.empty()
@@ -689,6 +670,9 @@ private[native] final class NativePart(val status: FileStatus, conf: Configurati
 
   lazy val index: Option[(Array[NativeIndex.BlockEntry], Map[String, String])] =
     NativeIndex.readWithMeta(fs, status.getPath, status.getLen)
+
+  /** The part's row count as its sidecar records it; None without a valid one. */
+  def rowCount: Option[Long] = index.map(_._1.map(_.rows).sum)
 
   /** Read without touching data, with the compression the sidecar
     * declares — the authority the partition readers use — so files

@@ -30,9 +30,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
  * The sidecar is advisory and fail-safe: it names the data file's
  * exact byte length and block count, and a reader that finds ANY
  * mismatch (truncated sidecar, regenerated data file, non-monotonic
- * offsets) ignores it and scans the whole file sequentially. Count
- * pushdown and size statistics also read it: a `count(*)` over an
- * indexed directory touches only the tiny sidecars, never the data.
+ * offsets) ignores it and scans the whole file sequentially. Row
+ * counts and size statistics also read it: a `count(*)` over an
+ * indexed directory is answered on the driver from the sidecars.
  *
  * Sidecars also carry per-block MIN/MAX for numeric/date/timestamp
  * columns — zone maps, the parquet row-group-statistics trick — which

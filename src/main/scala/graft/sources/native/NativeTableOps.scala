@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /**
  * Table-maintenance operations over native-format directories: the
@@ -26,8 +27,8 @@ import org.apache.spark.sql.sources.Filter
  *     pointer flip / hardlink; a filesystem copy is the portable
  *     spelling of the same contract). A conjunct Spark cannot push
  *     simply drops out of pruning, never out of the mutation itself.
- *  2. only the affected parts are read (multi-path load of exactly
- *     those files), mutated declaratively, and rewritten — one
+ *  2. only the affected parts are read (a scan of exactly the parts
+ *     the pass listed), mutated declaratively, and rewritten — one
  *     distributed job over the affected fraction, which for the
  *     selective predicates mutations are used for is a tiny slice of
  *     the table.
@@ -389,12 +390,19 @@ object NativeTableOps {
    * snapshot ([[boundParts]]) serves the pass's planning and checks,
    * and the first scan of the returned frame.
    */
-  private def bind(spark: SparkSession, dir: String*): DataFrame =
-    spark.read.format("clickhouse_native").option("mergeSchema", "true").load(dir: _*)
+  private def bind(spark: SparkSession, dir: String): DataFrame =
+    spark.read.format("clickhouse_native").option("mergeSchema", "true").load(dir)
 
-  /** The parts a rewrite job reads, bound afresh (their own listing). */
-  private def load(spark: SparkSession, parts: Seq[NativePart]): DataFrame =
-    bind(spark, parts.map(_.status.getPath.toString): _*)
+  /** The parts a rewrite job reads, as the pass already holds them:
+    * their union schema from the headers the bind probed, and a table
+    * whose scan plans from these parts, with no second listing. */
+  private def load(spark: SparkSession, parts: Seq[NativePart]): DataFrame = {
+    val paths = parts.map(_.status.getPath.toString)
+    val table = new NativeTable(NativeIO.schemaOf(paths, parts, mergeSchema = true), paths,
+      listed = Some(parts))
+    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+      DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty()))
+  }
 
   /** The part snapshot the bind of `src` listed. */
   private def boundParts(src: DataFrame): Seq[NativePart] =

@@ -131,13 +131,6 @@ class NativeScanSpec extends AnyFunSuite {
       assert(buckets === Seq(0, 1))
     }
     assert(keyed === 1)
-    // a count(*) scan lists once too, and its partitions carry the length
-    CountGlobFileSystem.calls.set(0)
-    val count = new NativeCountScan(Seq(s"countglob://$dir"), new SerializableHadoopConf(conf))
-    val counted = count.planInputPartitions().toSeq
-    assert(count.planInputPartitions().toSeq === counted)
-    assert(CountGlobFileSystem.calls.get === 1)
-    assert(counted.map(_.asInstanceOf[NativeCountPartition].length) === Seq(part.length()))
   }
 
   test("a scan reads each sidecar once: statistics, both plans and the runtime re-plan share it") {
@@ -186,6 +179,37 @@ class NativeScanSpec extends AnyFunSuite {
       assert(opens.size === 8, opens)
       assert(opens.values.stream.allMatch(_ == 1), opens)
     }
+  }
+
+  private def batchScans(df: DataFrame): Seq[BatchScanExec] =
+    SparkTestBase.walkPlan(df.queryExecution.executedPlan).collect { case b: BatchScanExec => b }
+
+  test("a clickhouse_native('<dir>') count(*) answers from the bind's parts on the driver") {
+    val dir = sortedParts("tvf-count")
+    CountGlobFileSystem.counting {
+      val df = spark.sql(s"SELECT count(*) FROM clickhouse_native('countglob://$dir')")
+      assert(df.collect().map(_.getLong(0)).toSeq === Seq(8000L))
+      assert(batchScans(df).isEmpty, df.queryExecution.executedPlan.toString)
+      assert(CountGlobFileSystem.calls.get === 1)
+      assert(CountGlobFileSystem.listings.get === 1)
+      val opens = CountGlobFileSystem.sidecarOpens
+      assert(opens.size === 8, opens)
+      assert(opens.values.stream.allMatch(_ == 1), opens)
+      // the bind's header probe of the first part, and nothing else
+      assert(CountGlobFileSystem.dataOpens.values.stream.mapToInt(_.intValue).sum === 1,
+        CountGlobFileSystem.dataOpens)
+    }
+  }
+
+  test("count(*) with one part's sidecar gone is exact and runs through the native scan") {
+    val dir = sortedParts("tvf-count-unindexed")
+    val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".clickhouse"))
+      .minBy(_.getName)
+    assert(new java.io.File(dir, s".${part.getName}.chidx").delete())
+    val df = spark.sql(s"SELECT count(*) FROM clickhouse_native('$dir')")
+    assert(df.collect().map(_.getLong(0)).toSeq === Seq(8000L))
+    assert(batchScans(df).map(_.scan.isInstanceOf[NativeScan]) === Seq(true),
+      df.queryExecution.executedPlan.toString)
   }
 
   test("an explicit-schema read lists once") {
@@ -349,7 +373,7 @@ class NativeScanSpec extends AnyFunSuite {
     Files.write(copy.toPath, Files.readAllBytes(part.toPath).take(cut.toInt))
     val df = spark.sql(s"SELECT count(*) FROM clickhouse_native('$dir')")
     assert(SparkTestBase.walkPlan(df.queryExecution.executedPlan).exists {
-      case b: BatchScanExec => b.scan.isInstanceOf[NativeCountScan]
+      case b: BatchScanExec => b.scan.isInstanceOf[NativeScan]
       case _ => false
     }, df.queryExecution.executedPlan.toString)
     val e = intercept[Exception](df.collect())

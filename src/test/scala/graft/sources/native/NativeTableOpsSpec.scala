@@ -203,13 +203,12 @@ class NativeTableOpsSpec extends AnyFunSuite {
       val res = NativeTableOps.applyTtl(spark, s"countglob://$src", dst, "ts", cutoff)
       assert((res.dropped.size, res.copied.size, res.rewritten.size) === ((4, 3, 1)), res)
       // the bind lists the source once; its snapshot plans, checks the
-      // drop tier and picks the codec. The rewrite job binds its own
-      // part (one glob of a file path, no directory listing).
+      // drop tier, picks the codec and serves the rewrite job's scan
       assert(CountGlobFileSystem.listings.get === 1)
-      assert(CountGlobFileSystem.calls.get === 1 + res.rewritten.size)
+      assert(CountGlobFileSystem.calls.get === 1)
       // one sidecar parse per part; copied parts are byte-copied with
-      // their sidecar, and the rewrite job parses its part's once more
-      val extra = (res.copied ++ res.rewritten).toSet
+      // their sidecar
+      val extra = res.copied.toSet
       val expected = partFiles(src).map { f =>
         s".${f.getName}.chidx" -> (if (extra(f.getName)) 2 else 1)
       }.toMap
